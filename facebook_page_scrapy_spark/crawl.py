@@ -27,16 +27,22 @@ parallel budgets FIFO-per-host still holds.
 Scale: each round is TWO materializing actions before the snapshot commit —
 (1) one job materializing fetch → fused parse → candidate build through
 chained persists, (2) the bloom shard update, which doubles as the
-materializer for the deduped frontier rows — plus two bounded
-``localCheckpoint`` jobs inside scheduler.distributed_row_number (the
-dispatch-trace rank and the discovery-sequence rank), which buy the loop's
-two global orderings WITHOUT a partition-less window's single-task sort and
-truncate the round's plan lineage as a side effect. Every counter rides on
-``df.observe`` CollectMetrics accumulators (A7) instead of extra count()
-round-trips. The per-host window shuffle doubles as the fetch stage's host
-partitioning; the bloom probe is a map-side filter with worker-local shard
-caching. Nothing in the loop collects row data to the driver — only observed
-counters.
+materializer for the deduped frontier rows — plus one bounded
+``localCheckpoint`` job inside each of the round's two
+scheduler.distributed_row_number calls (the dispatch-trace rank and the
+discovery-sequence rank), which buy the loop's two global orderings WITHOUT
+a partition-less window's single-task sort and truncate the round's plan
+lineage as a side effect. A batch the running pending-frontier estimate
+(persisted in every manifest, so it survives resume) says fits one task is
+ranked in one task with no sampling or offset jobs; larger batches take the
+range-partitioned path. Every counter rides on ``df.observe``
+CollectMetrics accumulators (A7) instead of extra count() round-trips. The
+per-host window shuffle doubles as the fetch stage's host partitioning; the
+bloom probe is a map-side filter with worker-local shard caching. Nothing in
+the loop collects row data to the driver — only observed counters. A round
+that raises before it publishes leaves the engine at its last published
+snapshot (round, filter version and estimate restored, round caches
+released), so the next call retries it.
 """
 
 from __future__ import annotations
@@ -66,6 +72,8 @@ from facebook_page_scrapy_spark.state.snapshot import SnapshotStore
 from pyspark.sql import types as ST
 
 ROUND_BASE = 2**32
+# parse fan-out: one Python task per this many pages of pending frontier
+PAGES_PER_PARSE_TASK = 2048
 # copy, don't .add(): StructType.add mutates the receiver in place and would
 # corrupt the shared schemas.FRONTIER for every other importer
 FRONTIER_EVENT_SCHEMA = ST.StructType(
@@ -79,6 +87,7 @@ class RoundStats:
     dispatched: int = 0
     fetched: int = 0
     failed: int = 0
+    exhausted: int = 0  # failures past the retry budget (state "failed")
     discovered: int = 0
     deduped: int = 0
     enqueued: int = 0
@@ -125,10 +134,6 @@ class CrawlEngine:
         # rotation parity is reproducible). Counted ONCE here, not per round:
         # the pool is a tiny static table and alive.count() in the hot loop
         # was a fixed driver round-trip per round.
-        # running frontier-size estimate (seeded at seed(), advanced from the
-        # round's observed counters): sizes the distributed ranks' sort width
-        # without any extra count() job; None (e.g. resume) -> full width
-        self._pending_est: int | None = None
         self._n_identities = 0
         self._identity_start = 0
         if identities is not None:
@@ -148,9 +153,36 @@ class CrawlEngine:
         self.compact_every = compact_every
         self.comment_page_step = comment_page_step
         self.store_raw = store_raw
-        man = self.store.manifest()
-        self.round = man.get("meta", {}).get("round", 0)
-        self.bloom_version = man.get("meta", {}).get("bloom_version", 0)
+        meta = self.store.manifest().get("meta", {})
+        self.round = meta.get("round", 0)
+        self.bloom_version = meta.get("bloom_version", 0)
+        # running count of pending frontier rows: seeded at seed(), advanced
+        # from each round's observed counters (pending - fetched - exhausted
+        # + enqueued), recounted exactly where a commit materializes the
+        # frontier anyway (compaction, queue reset, forget). It sizes the
+        # dispatch rank and the parse fan-out without a count() job, and
+        # rides in every manifest's meta so a resumed engine starts from it.
+        # Never below the true count. None (a checkpoint written before the
+        # estimate existed) → the multi-task rank until a compaction recounts.
+        self._pending_est: int | None = meta.get(
+            "pending_est", 0 if self.round == 0 else None
+        )
+
+    def _parse_width(self) -> int:
+        cores = self.spark.sparkContext.defaultParallelism
+        if self._pending_est is None:
+            return cores
+        return max(1, min(cores, self._pending_est // PAGES_PER_PARSE_TASK + 1))
+
+    def _meta(self, phase: str, **extra) -> dict:
+        """Manifest meta for a commit: the resume state plus ``extra``."""
+        return {
+            "round": self.round,
+            "bloom_version": self.bloom_version,
+            "pending_est": self._pending_est,
+            "phase": phase,
+            **extra,
+        }
 
     # ------------------------------------------------------------------ state
     def frontier_current(self) -> DataFrame:
@@ -212,12 +244,10 @@ class CrawlEngine:
             else:
                 self.bloom_version = self.bloom.add(seen, self.bloom_version)
         self.round += 1
-        sid = self.store.commit(
-            {"frontier": seeds, "seen": seen},
-            meta={"round": self.round, "bloom_version": self.bloom_version, "phase": "seed"},
-        )
+        if self._pending_est is not None:
+            self._pending_est += raw_n
+        sid = self.store.commit({"frontier": seeds, "seen": seen}, meta=self._meta("seed"))
         seeds.unpersist()
-        self._pending_est = (self._pending_est or 0) + raw_n
         return sid
 
     def seed_fanpages(self, page_ids: list[str]) -> int:
@@ -238,6 +268,26 @@ class CrawlEngine:
 
     # ------------------------------------------------------------------ rounds
     def run_round(self) -> RoundStats:
+        """Run one round and publish it as one snapshot. A round that raises
+        before its publish restores the resume state (round, filter version,
+        pending estimate) and releases its caches, so the engine stays at its
+        last published snapshot and calling again retries the round."""
+        saved = (self.round, self.bloom_version, self._pending_est)
+        cache: list[DataFrame] = []
+        try:
+            stats = self._round(cache)
+        except BaseException:
+            self.round, self.bloom_version, self._pending_est = saved
+            raise
+        finally:
+            for df in cache:
+                df.unpersist()
+        if stats.snapshot_id and self.round % self.compact_every == 0:
+            self.compact_frontier()
+        return stats
+
+    def _round(self, cache: list[DataFrame]) -> RoundStats:
+        """One round's body; every DataFrame it persists goes into ``cache``."""
         _t = time.time()
         stats = RoundStats(round=self.round + 1)
         pending = self.frontier_current().filter(F.col("state") == "pending")
@@ -283,6 +333,8 @@ class CrawlEngine:
                 obs_fetch,
                 F.count(F.lit(1)).alias("n"),
                 F.coalesce(F.sum(F.col("fetch_ok").cast("long")), F.lit(0)).alias("ok"),
+                F.count_if(~F.col("fetch_ok") & (F.col("attempts") + 1 >= S.MAX_RETRIES))
+                .alias("exhausted"),
             )
             .persist()
         )
@@ -299,8 +351,11 @@ class CrawlEngine:
             # explicit repartition: AQE coalesces the upstream shuffle toward
             # 64MB targets, which serializes the Python parse stage on small
             # batches; an explicit count is respected and spreads the Arrow
-            # workers across the executor pool
-            .repartition(self.spark.sparkContext.defaultParallelism)
+            # workers across the executor pool — but no wider than the
+            # pending frontier (the batch's upper bound) fills at
+            # PAGES_PER_PARSE_TASK pages a task, so a one-page round starts
+            # one Python task, not one per core
+            .repartition(self._parse_width())
             .mapInPandas(P.parse_all, P.PARSE_ALL_SCHEMA)
             .observe(
                 obs_parse,
@@ -382,6 +437,7 @@ class CrawlEngine:
             .filter(F.col("__dup") == 1)
             .persist()
         )
+        cache += [fetched, parsed, cand]
         _t = _tmark("build plans", _t)
         # ---- action 1 of 2: one job materializes fetched → parsed → cand
         # (chained persists) and fires all three observations
@@ -391,21 +447,19 @@ class CrawlEngine:
         stats.dispatched = int(frow["n"] or 0)
         stats.fetched = int(frow["ok"] or 0)
         stats.failed = stats.dispatched - stats.fetched
+        stats.exhausted = int(frow["exhausted"] or 0)
         type_counts = {k: int(v or 0) for k, v in obs_parse.get.items()}
         stats.parsed_posts = type_counts.get("post", 0)
         stats.parsed_comments = type_counts.get("comment", 0)
         if stats.dispatched == 0:
-            for df in (fetched, parsed, cand):
-                df.unpersist()
             return stats
 
         _t = _tmark("job1 fetch+parse+cand", _t)
         # cross-round dedup (bloom-gated or exact)
         seen = self.seen_df()
-        round_cache: list[DataFrame] = [fetched, parsed, cand]
         if self.use_bloom and self.bloom_version > 0:
             fresh = D.dedup_bloom_gated(
-                cand, seen, self.bloom, self.bloom_version, cleanup=round_cache
+                cand, seen, self.bloom, self.bloom_version, cleanup=cache
             )
         else:
             fresh = D.dedup_exact(cand, seen)
@@ -415,7 +469,6 @@ class CrawlEngine:
         # rank as the dispatch trace: a round's fresh-discovery batch is the
         # fetch batch × links-per-page, the largest row set in the loop — a
         # partition-less window here would single-task-sort it every round
-        obs_new = Observation()
         new_rows = (
             S.distributed_row_number(
                 fresh,
@@ -431,8 +484,8 @@ class CrawlEngine:
             .withColumn("attempts", F.lit(0))
             .withColumn("event_seq", F.col("enqueued_seq"))
             .select(*[f.name for f in FRONTIER_EVENT_SCHEMA.fields])
-            .observe(obs_new, F.count(F.lit(1)).alias("n"))
         ).persist()
+        cache.append(new_rows)
         _t = _tmark("build dedup plan", _t)
         # ---- state-transition events -----------------------------------------
         tbase = base + 2**31
@@ -445,13 +498,13 @@ class CrawlEngine:
         fail_rows = failed.withColumn("event_seq", F.lit(tbase) + F.col("__rank") + 2**20)
         retry_events = S.retry_requeue(fail_rows.select(*f_cols)).select(*f_cols)
         exhausted = (
-            fail_rows.filter(F.col("attempts") + 1 >= 200)
+            fail_rows.filter(F.col("attempts") + 1 >= S.MAX_RETRIES)
             .withColumn("state", F.lit("failed"))
             .select(*f_cols)
         )
         frontier_delta = (
             new_rows.unionByName(done_events).unionByName(retry_events).unionByName(exhausted)
-        ).persist()
+        )
 
         # ---- action 2 of 2: the bloom shard update is the job that
         # materializes new_rows (persisted) — enqueued/deduped counters ride
@@ -461,9 +514,15 @@ class CrawlEngine:
         # publishes, and only the tiny lineage table needs the observed
         # counters + post-update filter version — so the shard job and the
         # parquet writes (the round's two serial tails) overlap.
+        # The observation sits on new_seen, above the cache: every job that
+        # reads new_seen (the filter update, the seen write) runs its own
+        # counter over all the rows. Inside new_rows' cached plan it would
+        # run once, in whichever job builds the cache, and a concurrent job
+        # that only read the built blocks could report first with 0 rows.
+        obs_new = Observation()
         new_seen = new_rows.select(
             "url_canon", D.bucket_of(F.col("url_canon"), self.n_bloom_shards).alias("bucket")
-        )
+        ).observe(obs_new, F.count(F.lit(1)).alias("n"))
         self.round += 1
 
         def _filter_update() -> None:
@@ -554,43 +613,26 @@ class CrawlEngine:
             )
         )
         staged += self.store.stage(sid, {"lineage": lineage})
-        stats.snapshot_id = self.store.publish(
-            sid,
-            staged,
-            meta={
-                "round": self.round,
-                "bloom_version": self.bloom_version,
-                "stats": stats.__dict__ | {"extras": {}},
-            },
-        )
-
-        _t = _tmark("lineage+publish", _t)
-        if self.round % self.compact_every == 0:
-            self.compact_frontier()
-        for df in (*round_cache, new_rows, frontier_delta):
-            df.unpersist()
-        # advance the frontier-size estimate from this round's observed
-        # counters: pending loses the fetched+exhausted rows, gains the
-        # enqueued ones; failures re-enter as retries (counted back in).
-        # Only sizes next round's sort width -- exactness not required.
+        # pending loses the fetched and the exhausted rows and gains the
+        # enqueued ones; a retried failure stays pending (it is in neither)
         if self._pending_est is not None:
             self._pending_est = max(
-                0, self._pending_est - stats.fetched + stats.enqueued + stats.failed
+                0, self._pending_est - stats.fetched - stats.exhausted + stats.enqueued
             )
-        _tmark("compact/cleanup", _t)
+        stats.snapshot_id = self.store.publish(
+            sid, staged, meta=self._meta("round", stats=stats.__dict__ | {"extras": {}})
+        )
+        _tmark("lineage+publish", _t)
         return stats
 
     def compact_frontier(self) -> None:
         """Rewrite the frontier log as its current view (latest event per URL).
         Bounds the merge-on-read delta chain to ``compact_every`` files."""
         cur = self.frontier_current().persist()
-        cur.count()  # materialize before the manifest swap (no read-own-write)
-        self.store.commit(
-            {"frontier": cur},
-            meta={"round": self.round, "bloom_version": self.bloom_version,
-                  "phase": "compact"},
-            replace={"frontier"},
-        )
+        # materialize before the manifest swap (no read-own-write); the
+        # filtered count still builds the whole cache and recounts pending
+        self._pending_est = cur.filter(F.col("state") == "pending").count()
+        self.store.commit({"frontier": cur}, meta=self._meta("compact"), replace={"frontier"})
         cur.unpersist()
 
     def run(self, max_rounds: int = 1000) -> list[RoundStats]:
@@ -621,10 +663,7 @@ class CrawlEngine:
         ).persist()
         enriched.count()  # materialize before the manifest swap
         self.store.commit(
-            {"posts_enriched": enriched},
-            meta={"round": self.round, "bloom_version": self.bloom_version,
-                  "phase": "enrich"},
-            replace={"posts_enriched"},
+            {"posts_enriched": enriched}, meta=self._meta("enrich"), replace={"posts_enriched"}
         )
         enriched.unpersist()
         return self.store.read(self.spark, "posts_enriched")
@@ -667,11 +706,9 @@ class CrawlEngine:
             .select(*[f.name for f in FRONTIER_EVENT_SCHEMA.fields])
         )
         self.round += 1
-        self.store.commit(
-            {"frontier": requeue},
-            meta={"round": self.round, "bloom_version": self.bloom_version,
-                  "phase": "repair"},
-        )
+        if self._pending_est is not None:
+            self._pending_est += n
+        self.store.commit({"frontier": requeue}, meta=self._meta("repair"))
         targets.unpersist()
         return n
 
@@ -723,10 +760,10 @@ class CrawlEngine:
             .select(*[f.name for f in FRONTIER_EVENT_SCHEMA.fields])
         )
         self.round += 1
+        if self._pending_est is not None:
+            self._pending_est += n
         self.store.commit(
-            {"frontier": requeue},
-            meta={"round": self.round, "bloom_version": self.bloom_version,
-                  "phase": "recrawl_comments", "reset": reset},
+            {"frontier": requeue}, meta=self._meta("recrawl_comments", reset=reset)
         )
         requeue_src.unpersist()
         return n
@@ -746,14 +783,10 @@ class CrawlEngine:
             cur.unpersist()
             return 0
         kept = cur.filter(~is_transient).persist()
-        kept.count()  # materialize before the manifest swap
+        # materialize before the manifest swap; recounts pending as it does
+        self._pending_est = kept.filter(F.col("state") == "pending").count()
         self.round += 1
-        self.store.commit(
-            {"frontier": kept},
-            meta={"round": self.round, "bloom_version": self.bloom_version,
-                  "phase": "queue_reset"},
-            replace={"frontier"},
-        )
+        self.store.commit({"frontier": kept}, meta=self._meta("queue_reset"), replace={"frontier"})
         cur.unpersist()
         kept.unpersist()
         return n
@@ -786,7 +819,8 @@ class CrawlEngine:
         new_frontier = self.frontier_current().join(
             targets, "url_canon", "left_anti"
         ).persist()
-        new_frontier.count()
+        # materialize; recounts pending as it does
+        self._pending_est = new_frontier.filter(F.col("state") == "pending").count()
         self.round += 1
         if self.use_bloom:
             if hasattr(self.bloom, "delete"):
@@ -798,8 +832,7 @@ class CrawlEngine:
                 self.bloom.build(new_seen, version=self.bloom_version)
         self.store.commit(
             {"frontier": new_frontier, "seen": new_seen},
-            meta={"round": self.round, "bloom_version": self.bloom_version,
-                  "phase": "forget"},
+            meta=self._meta("forget"),
             replace={"frontier", "seen"},
         )
         for df in (targets, new_seen, new_frontier):

@@ -28,6 +28,7 @@ from __future__ import annotations
 import hashlib
 import math
 import os
+import shutil
 from dataclasses import dataclass
 
 import numpy as np
@@ -49,6 +50,13 @@ def _cache_get(kind: str, bucket: int, path: str, loader):
     shard = loader(path)
     _WORKER_CACHE[(kind, bucket)] = (path, shard)  # evicts the old version
     return shard
+
+
+def _clear_version(version_dir: str) -> None:
+    """Drop what an unpublished attempt left at the version about to be
+    written, so the retry writes fresh files — never through a hard link
+    into the previous version's shard."""
+    shutil.rmtree(version_dir, ignore_errors=True)
 
 
 def bucket_of(url_canon, n_shards: int):
@@ -73,11 +81,6 @@ def _positions(h1: np.ndarray, h2: np.ndarray, k: int, m: int) -> "list[np.ndarr
         with np.errstate(over="ignore"):
             out.append(((h1 + np.int64(i) * h2) % np.int64(m)).astype(np.int64))
     return out
-
-
-def _hash2(url: str) -> tuple[int, int]:
-    d = hashlib.blake2b(url.encode("utf-8"), digest_size=16).digest()
-    return int.from_bytes(d[:8], "little"), int.from_bytes(d[8:], "little") | 1
 
 
 def _bloom_params(n: int, fpr: float) -> tuple[int, int]:
@@ -127,6 +130,7 @@ class BloomStore:
         """Build all shards from the full seen set (url_canon column)."""
         n_shards, fpr, path = self.n_shards, self.fpr, self.path
         shard_file = self._shard_file
+        _clear_version(os.path.dirname(shard_file(version, 0)))
 
         per_bucket = seen.select(
             bucket_of(F.col("url_canon"), n_shards).alias("bucket"),
@@ -172,6 +176,7 @@ class BloomStore:
         version = from_version + 1
         n_shards = self.n_shards
         src_file, dst_file = self._shard_file, self._shard_file
+        _clear_version(os.path.dirname(dst_file(version, 0)))
 
         def add_shard(pdf: pd.DataFrame) -> pd.DataFrame:
             bucket = int(pdf["bucket"].iloc[0])
@@ -207,8 +212,6 @@ class BloomStore:
                 try:
                     os.link(src, dst)
                 except OSError:
-                    import shutil
-
                     shutil.copyfile(src, dst)
         return version
 
@@ -321,6 +324,7 @@ class CuckooStore:
                op: str) -> None:
         n_shards, cap = self.n_shards, self.capacity
         shard_file = self._shard_file
+        _clear_version(os.path.dirname(shard_file(version, 0)))
 
         def run(pdf: pd.DataFrame) -> pd.DataFrame:
             bucket = int(pdf["bucket"].iloc[0])
@@ -366,8 +370,6 @@ class CuckooStore:
                     try:
                         os.link(src, dst)
                     except OSError:
-                        import shutil
-
                         shutil.copyfile(src, dst)
 
     def build(self, seen: DataFrame, version: int = 1) -> int:

@@ -26,6 +26,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# rows one rank task sorts; a batch hinted below this is ranked in one task
+ROWS_PER_TASK = 65536
+# fetch attempts per URL before it is marked failed (RETRY_TIMES, settings.py:45)
+MAX_RETRIES = 200
+
+
 def dispatch_order():
     """Higher priority class first (reaction=4 … page=1), then FIFO by
     enqueued_seq — exactly gen_next_url's pop order."""
@@ -57,9 +63,28 @@ def distributed_row_number(
     materializing job per call — which doubles as lineage truncation for
     the round loop (each round's dispatch plan no longer drags the full
     frontier-scan lineage into every downstream job).
+
+    One-task case: when ``n_rows_hint`` says the batch fits one task
+    (< ``ROWS_PER_TASK`` rows — a parity round's one-URL dispatch, a small
+    round's discoveries), the batch is moved into a single partition and
+    ranked there. Every offset is 0, so the range-sampling pass, the input
+    persist that serves it and the counts → broadcast self-join → offsets
+    subplan are all skipped. The window still partitions by ``__pid`` (one
+    value), so no partition-less WindowExec appears on either path. Calls
+    without a hint take the multi-task path.
     """
-    spark = df.sparkSession
-    parts = max(2, spark.sparkContext.defaultParallelism)
+    if n_rows_hint is not None and n_rows_hint < ROWS_PER_TASK:
+        return (
+            df.repartition(1)
+            .withColumn("__pid", F.spark_partition_id())
+            .withColumn(
+                out,
+                F.row_number().over(Window.partitionBy("__pid").orderBy(*order)).cast("int"),
+            )
+            .drop("__pid")
+            .localCheckpoint(eager=True)
+        )
+    parts = max(2, df.sparkSession.sparkContext.defaultParallelism)
     if n_rows_hint is not None:
         # size the sort width from the caller's row estimate (the crawl loop
         # already tracks frontier counts via df.observe): ~64k rows/task keeps
@@ -67,7 +92,7 @@ def distributed_row_number(
         # constants on small rounds. The hint only sizes tasks — rank VALUES
         # are partition-count-invariant (tools/check_invariance.py sweeps it),
         # and an underestimate just means fatter per-task sorts.
-        parts = max(2, min(parts, n_rows_hint // 65536 + 1))
+        parts = max(2, min(parts, n_rows_hint // ROWS_PER_TASK + 1))
     # the range partitioner's sampling pass AND the checkpoint both execute
     # the input's lineage; pin it for the duration so the upstream plan
     # (frontier merge-on-read + dispatch window, or the dedup anti-join)
@@ -286,7 +311,7 @@ def assign_identities(
     return slotted.join(F.broadcast(ranked), "__slot", "left").drop("__slot")
 
 
-def retry_requeue(failed: DataFrame, max_retries: int = 200) -> DataFrame:
+def retry_requeue(failed: DataFrame, max_retries: int = MAX_RETRIES) -> DataFrame:
     """Failed fetches rejoin the frontier with attempts+1 until the retry
     budget (RETRY_TIMES=200, settings.py:45) is exhausted; the bumped
     enqueued_seq acts as backoff (they sort after fresh peers)."""

@@ -22,6 +22,11 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 
+class StaleSnapshotError(RuntimeError):
+    """``publish`` got a snapshot id that is not the next one: another commit
+    landed between stage and publish."""
+
+
 class SnapshotStore:
     def __init__(self, path: str):
         self.path = path
@@ -98,9 +103,13 @@ class SnapshotStore:
     ) -> int:
         """Publish staged delta files as snapshot ``sid`` via atomic manifest
         rename — a crash before this point leaves the previous snapshot
-        intact (resume sees only published state)."""
+        intact (resume sees only published state). Raises
+        ``StaleSnapshotError`` unless ``sid`` follows the latest snapshot."""
         prev = self.manifest()
-        assert sid == prev["snapshot_id"] + 1, (sid, prev["snapshot_id"])
+        if sid != prev["snapshot_id"] + 1:
+            raise StaleSnapshotError(
+                f"cannot publish snapshot {sid}: the latest is {prev['snapshot_id']}"
+            )
         tables: dict[str, list[str]] = {
             t: list(paths) for t, paths in prev.get("tables", {}).items()
         }

@@ -20,6 +20,16 @@ def build_engine(spark, site, tmp_path, **kw):
     return CrawlEngine(spark, str(tmp_path / "ckpt"), fetcher, **kw)
 
 
+def pending_count(eng) -> int:
+    return eng.frontier_current().filter("state = 'pending'").count()
+
+
+def cached_dataframes(spark) -> int:
+    """Persisted DataFrames (named RDDs; local checkpoints carry no name)."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    return sum(1 for k in rdds if rdds[k].name() is not None)
+
+
 def test_two_level_parity(spark, tmp_path):
     site = datagen.make_site(n_groups=2, pages_per_group=2, posts_per_page=1, seed=7)
     sim = simulate(site)
@@ -79,14 +89,54 @@ def test_resume_mid_crawl(spark, tmp_path):
     eng1.seed(site.seeds)
     for _ in range(3):
         eng1.run_round()
+    # failure-free rounds keep the pending estimate exact
+    assert eng1._pending_est == pending_count(eng1)
 
     # new engine object on the same checkpoint dir = process restart
     eng2 = build_engine(spark, site, tmp_path, default_tokens=1)
     assert eng2.round == eng1.round
+    assert eng2._pending_est == eng1._pending_est
     eng2.run(max_rounds=60)
 
     assert eng2.fetch_order() == sim.fetch_order
     assert eng2.seen_set() == sim.seen
+
+
+def test_failed_stage_rolls_back_and_retries(spark, tmp_path, monkeypatch):
+    """A round whose stage raises leaves the engine at its last published
+    snapshot with the round's caches released; the next call retries the
+    round and the crawl still matches the reference."""
+    site = datagen.make_site(n_groups=2, pages_per_group=2, posts_per_page=1, seed=29)
+    sim = simulate(site)
+
+    eng = build_engine(spark, site, tmp_path, default_tokens=1, n_bloom_shards=4)
+    eng.seed(site.seeds)
+    for _ in range(2):
+        eng.run_round()
+    resume_state = (eng.round, eng.bloom_version, eng._pending_est)
+    cached = cached_dataframes(spark)
+
+    stage = eng.store.stage
+    failures = []
+
+    def stage_failing_once(sid, deltas):
+        if not failures:
+            failures.append(sid)
+            raise OSError("injected stage failure")
+        return stage(sid, deltas)
+
+    monkeypatch.setattr(eng.store, "stage", stage_failing_once)
+    with pytest.raises(OSError, match="injected"):
+        eng.run_round()
+    assert (eng.round, eng.bloom_version, eng._pending_est) == resume_state
+    assert eng.round == eng.store.manifest()["meta"]["round"]
+    assert cached_dataframes(spark) == cached
+
+    eng.run(max_rounds=60)
+    assert eng.fetch_order() == sim.fetch_order
+    assert eng.seen_set() == sim.seen
+    assert eng.round == eng.store.manifest()["meta"]["round"]
+    assert eng._pending_est == pending_count(eng) == 0
 
 
 def test_queue_reset_on_resume_parity(spark, tmp_path):

@@ -255,21 +255,28 @@ def _big_frontier(spark, n=5000, hosts=40):
     return frontier_rows(spark, rows)
 
 
+# hint None → the multi-task range-partitioned rank; hint 1 → the one-task rank
+RANK_HINTS = (None, 1)
+
+
 def test_distributed_rank_matches_global_window(spark):
     from pyspark.sql import Window
 
     df = _big_frontier(spark)
-    got = S.distributed_row_number(df, S.dispatch_order(), "__rank")
     want = df.withColumn(
         "__rank", F.row_number().over(Window.orderBy(*S.dispatch_order()))
     )
-    diff = (
-        got.select("url_canon", "__rank")
-        .exceptAll(want.select("url_canon", "__rank"))
-        .count()
-    )
-    assert diff == 0
-    assert got.schema["__rank"].dataType.simpleString() == "int"
+    for n_rows_hint in RANK_HINTS:
+        got = S.distributed_row_number(
+            df, S.dispatch_order(), "__rank", n_rows_hint=n_rows_hint
+        )
+        diff = (
+            got.select("url_canon", "__rank")
+            .exceptAll(want.select("url_canon", "__rank"))
+            .count()
+        )
+        assert diff == 0, n_rows_hint
+        assert got.schema["__rank"].dataType.simpleString() == "int"
 
 
 def test_round_dispatch_plan_has_no_partitionless_window(spark):
@@ -280,8 +287,11 @@ def test_round_dispatch_plan_has_no_partitionless_window(spark):
     single-task sort."""
     df = _big_frontier(spark)
     dispatch = S.per_host_dispatch(df, default_tokens=1000)
-    ranked = S.distributed_row_number(dispatch, S.dispatch_order(), "__rank")
-    assert _partitionless_windows(ranked) == []
+    for n_rows_hint in RANK_HINTS:
+        ranked = S.distributed_row_number(
+            dispatch, S.dispatch_order(), "__rank", n_rows_hint=n_rows_hint
+        )
+        assert _partitionless_windows(ranked) == [], n_rows_hint
 
 
 def test_discovery_rank_plan_has_no_partitionless_window(spark):
@@ -289,13 +299,15 @@ def test_discovery_rank_plan_has_no_partitionless_window(spark):
     src_rank/link_idx/url_canon) through the same helper."""
     rows = [(i % 97, i % 13, f"https://x/{i}") for i in range(4000)]
     df = spark.createDataFrame(rows, "src_rank int, link_idx int, url_canon string")
-    ranked = S.distributed_row_number(
-        df, [F.asc("src_rank"), F.asc("link_idx"), F.asc("url_canon")], "__r"
-    )
-    assert _partitionless_windows(ranked) == []
-    # total order with a unique tiebreaker ⇒ ranks are a permutation of 1..n
-    agg = ranked.agg(
-        F.count("*").alias("n"), F.min("__r").alias("lo"), F.max("__r").alias("hi"),
-        F.count_distinct("__r").alias("d"),
-    ).collect()[0]
-    assert (agg.n, agg.lo, agg.hi, agg.d) == (4000, 1, 4000, 4000)
+    for n_rows_hint in RANK_HINTS:
+        ranked = S.distributed_row_number(
+            df, [F.asc("src_rank"), F.asc("link_idx"), F.asc("url_canon")], "__r",
+            n_rows_hint=n_rows_hint,
+        )
+        assert _partitionless_windows(ranked) == [], n_rows_hint
+        # total order with a unique tiebreaker ⇒ ranks are a permutation of 1..n
+        agg = ranked.agg(
+            F.count("*").alias("n"), F.min("__r").alias("lo"), F.max("__r").alias("hi"),
+            F.count_distinct("__r").alias("d"),
+        ).collect()[0]
+        assert (agg.n, agg.lo, agg.hi, agg.d) == (4000, 1, 4000, 4000), n_rows_hint

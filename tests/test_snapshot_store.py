@@ -4,7 +4,13 @@ snapshot's delta writes — crawl.py run_round)."""
 
 from __future__ import annotations
 
-from facebook_page_scrapy_spark.state.snapshot import SnapshotStore
+import subprocess
+import sys
+from pathlib import Path
+
+import pytest
+
+from facebook_page_scrapy_spark.state.snapshot import SnapshotStore, StaleSnapshotError
 
 
 def _df(spark, n, tag):
@@ -57,14 +63,35 @@ def test_publish_after_stage_equals_commit(spark, tmp_path):
 
 
 def test_publish_rejects_stale_sid(spark, tmp_path):
-    """publish asserts the snapshot chain is unbroken — a concurrent commit
+    """publish checks the snapshot chain is unbroken — a concurrent commit
     between stage and publish must fail loudly, not fork history."""
-    import pytest
-
     store = SnapshotStore(str(tmp_path / "snap"))
     store.commit({"t": _df(spark, 1, "a")})
     sid = store.manifest()["snapshot_id"] + 1
     written = store.stage(sid, {"t": _df(spark, 1, "b")})
     store.commit({"t": _df(spark, 1, "c")})  # someone else commits sid
-    with pytest.raises(AssertionError):
+    with pytest.raises(StaleSnapshotError):
         store.publish(sid, written)
+    assert store.latest() == 2
+
+
+def test_publish_stale_sid_raises_under_optimize(tmp_path):
+    """The stale-id check is an exception, not an ``assert``: it still runs
+    when Python strips asserts (``python -O``)."""
+    code = (
+        "import sys\n"
+        "from facebook_page_scrapy_spark.state.snapshot import SnapshotStore, StaleSnapshotError\n"
+        "store = SnapshotStore(sys.argv[1])\n"
+        "store.publish(1, [])\n"
+        "try:\n"
+        "    store.publish(1, [])\n"
+        "except StaleSnapshotError:\n"
+        "    sys.exit(0)\n"
+        "sys.exit(1)\n"
+    )
+    done = subprocess.run(
+        [sys.executable, "-O", "-c", code, str(tmp_path / "snap")],
+        cwd=Path(__file__).resolve().parents[1], capture_output=True, text=True,
+        timeout=120,
+    )
+    assert done.returncode == 0, done.stderr

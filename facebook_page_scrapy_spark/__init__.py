@@ -8,7 +8,7 @@ Layout
 - ``schemas``            StructType registry for every table (FIXTURES.md)
 - ``functions.urls``     URL canonicalization / classification (pure Column ops)
 - ``functions.text``     text analytics column functions (token count, quality, ...)
-- ``operators.dedup``    URL-seen anti-join + partitioned Bloom / cuckoo filters
+- ``operators.dedup``    URL-seen anti-join + partitioned Bloom filter
 - ``operators.scheduler``priority ordering, per-host politeness, robots gate, skew salting
 - ``operators.parse``    Arrow-batched HTML extraction (spans / links / comments / reactions)
 - ``operators.fetch``    pluggable fetch stage (synthetic corpus in the sandbox)

@@ -48,16 +48,7 @@ released), so the next call retries it.
 from __future__ import annotations
 
 import os
-import time
 from dataclasses import dataclass, field
-
-_DEBUG_TIMING = bool(os.environ.get("SPARK_GRAFT_DEBUG_TIMING"))
-
-
-def _tmark(label: str, t0: float) -> float:
-    if _DEBUG_TIMING:
-        print(f"    [round-timing] {label}: {time.time() - t0:.2f}s", flush=True)
-    return time.time()
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
@@ -79,6 +70,20 @@ PAGES_PER_PARSE_TASK = 2048
 FRONTIER_EVENT_SCHEMA = ST.StructType(
     list(schemas.FRONTIER.fields) + [ST.StructField("event_seq", ST.LongType(), False)]
 )
+
+
+def _pending_events(rows: DataFrame, depth: int) -> DataFrame:
+    """Pending frontier events from ``rows`` carrying the frontier columns
+    through ``enqueued_seq``: the tail every enqueue path (seed, discovery,
+    repair, comment recrawl) shares."""
+    return (
+        rows.withColumn("depth", F.lit(depth))
+        .withColumn("discovered_ts", F.lit(depth).cast("long"))
+        .withColumn("state", F.lit("pending"))
+        .withColumn("attempts", F.lit(0))
+        .withColumn("event_seq", F.col("enqueued_seq"))
+        .select(*[f.name for f in FRONTIER_EVENT_SCHEMA.fields])
+    )
 
 
 @dataclass
@@ -115,16 +120,11 @@ class CrawlEngine:
         compact_every: int = 8,
         comment_page_step: int = 10,
         store_raw: bool = True,
-        filter_kind: str = "bloom",
         identity_seed: int | None = None,
     ):
         self.spark = spark
         self.store = SnapshotStore(checkpoint_dir)
-        # URL-seen membership filter: bloom (append-only, smallest) or cuckoo
-        # (deletable — hosts with retraction churn; forget_urls becomes an
-        # incremental shard rewrite instead of a full rebuild)
-        filter_cls = D.CuckooStore if filter_kind == "cuckoo" else D.BloomStore
-        self.bloom = filter_cls(os.path.join(checkpoint_dir, "filters"), n_bloom_shards)
+        self.bloom = D.BloomStore(os.path.join(checkpoint_dir, "filters"), n_bloom_shards)
         self.fetcher = fetcher
         self.robots = robots
         self.host_budget = host_budget
@@ -213,26 +213,22 @@ class CrawlEngine:
         return s
 
     # ------------------------------------------------------------------ seeding
-    def _seed_rows(self, raw: DataFrame, raw_n: int = 0) -> int:
-        """Common seeding path: raw(group_id, url) rows → canonicalized
-        page-kind frontier entries + seen/bloom registration, in list order."""
+    def _seed_rows(self, rows: list[tuple[str, str]]) -> int:
+        """Common seeding path: (group_id, url) pairs → canonicalized
+        page-kind frontier entries + seen/bloom registration, in list order
+        (the sequence numbers are assigned on the driver, where the list is)."""
         base = (self.round + 1) * ROUND_BASE
-        w = Window.orderBy(F.col("__ord"))
-        seeds = (
-            raw.withColumn("__ord", F.monotonically_increasing_id())
-            .withColumn("url_canon", U.canonicalize(F.col("url")))
+        raw = self.spark.createDataFrame(
+            [(gid, url, base + i + 1) for i, (gid, url) in enumerate(rows)],
+            "group_id string, url string, enqueued_seq long",
+        )
+        seeds = _pending_events(
+            raw.withColumn("url_canon", U.canonicalize(F.col("url")))
             .withColumn("host", U.host_of(F.col("url_canon")))
             .withColumn("post_id", F.lit(None).cast("string"))
             .withColumn("kind", F.lit("page"))
-            .withColumn("depth", F.lit(0))
-            .withColumn("priority", F.lit(1))
-            .withColumn("enqueued_seq", F.lit(base) + F.row_number().over(w))
-            .withColumn("discovered_ts", F.lit(0).cast("long"))
-            .withColumn("state", F.lit("pending"))
-            .withColumn("attempts", F.lit(0))
-            .withColumn("event_seq", F.col("enqueued_seq"))
-            .drop("__ord")
-            .select(*[f.name for f in FRONTIER_EVENT_SCHEMA.fields])
+            .withColumn("priority", F.lit(1)),
+            depth=0,
         ).persist()
         seen = seeds.select(
             "url_canon", D.bucket_of(F.col("url_canon"), self.n_bloom_shards).alias("bucket")
@@ -245,7 +241,7 @@ class CrawlEngine:
                 self.bloom_version = self.bloom.add(seen, self.bloom_version)
         self.round += 1
         if self._pending_est is not None:
-            self._pending_est += raw_n
+            self._pending_est += len(rows)
         sid = self.store.commit({"frontier": seeds, "seen": seen}, meta=self._meta("seed"))
         seeds.unpersist()
         return sid
@@ -255,16 +251,14 @@ class CrawlEngine:
         homepage URL per page id — ``mbasic.facebook.com/<page_id>``, no
         /groups/ path. The homepages parse as fan-page timelines
         (operators.parse.extract_fanpage_posts) into the fanpage_posts table."""
-        rows = [(pid, f"https://mbasic.facebook.com/{pid}") for pid in page_ids]
-        raw = self.spark.createDataFrame(rows, "group_id string, url string")
-        return self._seed_rows(raw, len(rows))
+        return self._seed_rows([(pid, f"https://mbasic.facebook.com/{pid}") for pid in page_ids])
 
     def seed(self, group_ids: list[str]) -> int:
         """Seed page URLs from group ids in list order (Facebook_group_post.py
         :96-103 maps GROUP_IDS → page URLs)."""
-        rows = [(gid, f"https://mbasic.facebook.com/groups/{gid}") for gid in group_ids]
-        raw = self.spark.createDataFrame(rows, "group_id string, url string")
-        return self._seed_rows(raw, len(rows))
+        return self._seed_rows(
+            [(gid, f"https://mbasic.facebook.com/groups/{gid}") for gid in group_ids]
+        )
 
     # ------------------------------------------------------------------ rounds
     def run_round(self) -> RoundStats:
@@ -288,7 +282,6 @@ class CrawlEngine:
 
     def _round(self, cache: list[DataFrame]) -> RoundStats:
         """One round's body; every DataFrame it persists goes into ``cache``."""
-        _t = time.time()
         stats = RoundStats(round=self.round + 1)
         pending = self.frontier_current().filter(F.col("state") == "pending")
 
@@ -311,7 +304,6 @@ class CrawlEngine:
         dispatch = S.distributed_row_number(
             dispatch, S.dispatch_order(), "__rank", n_rows_hint=self._pending_est
         )
-        _t = _tmark("dispatch rank (incl. checkpoint job)", _t)
         if self.global_budget is not None:
             dispatch = dispatch.filter(F.col("__rank") <= self.global_budget)
         if self.identities is not None:
@@ -438,7 +430,6 @@ class CrawlEngine:
             .persist()
         )
         cache += [fetched, parsed, cand]
-        _t = _tmark("build plans", _t)
         # ---- action 1 of 2: one job materializes fetched → parsed → cand
         # (chained persists) and fires all three observations
         n_cand = cand.count()
@@ -454,7 +445,6 @@ class CrawlEngine:
         if stats.dispatched == 0:
             return stats
 
-        _t = _tmark("job1 fetch+parse+cand", _t)
         # cross-round dedup (bloom-gated or exact)
         seen = self.seen_df()
         if self.use_bloom and self.bloom_version > 0:
@@ -469,24 +459,16 @@ class CrawlEngine:
         # rank as the dispatch trace: a round's fresh-discovery batch is the
         # fetch batch × links-per-page, the largest row set in the loop — a
         # partition-less window here would single-task-sort it every round
-        new_rows = (
+        new_rows = _pending_events(
             S.distributed_row_number(
                 fresh,
                 [F.asc("src_rank"), F.asc("link_idx"), F.asc("url_canon")],
                 "__r",
                 n_rows_hint=n_cand,
-            )
-            .withColumn("enqueued_seq", F.lit(base) + F.col("__r"))
-            .drop("__r")
-            .withColumn("depth", F.lit(self.round))
-            .withColumn("discovered_ts", F.lit(self.round).cast("long"))
-            .withColumn("state", F.lit("pending"))
-            .withColumn("attempts", F.lit(0))
-            .withColumn("event_seq", F.col("enqueued_seq"))
-            .select(*[f.name for f in FRONTIER_EVENT_SCHEMA.fields])
+            ).withColumn("enqueued_seq", F.lit(base) + F.col("__r")),
+            depth=self.round,
         ).persist()
         cache.append(new_rows)
-        _t = _tmark("build dedup plan", _t)
         # ---- state-transition events -----------------------------------------
         tbase = base + 2**31
         f_cols = [f.name for f in FRONTIER_EVENT_SCHEMA.fields]
@@ -578,7 +560,6 @@ class CrawlEngine:
                 "doc_id", F.col("url_canon").alias("url"), "fetched_ts", "html"
             )
 
-        _t = _tmark("build deltas", _t)
         from concurrent.futures import ThreadPoolExecutor
 
         sid = self.store.manifest()["snapshot_id"] + 1
@@ -588,7 +569,6 @@ class CrawlEngine:
             fut.result()
         stats.enqueued = int(obs_new.get["n"] or 0)
         stats.deduped = n_cand - stats.enqueued
-        _t = _tmark("job2+writes overlapped (bloom, staged deltas)", _t)
 
         # ---- per-bucket lineage (north rule): the one delta that needs the
         # observed counters and the post-update filter version ----------------
@@ -622,7 +602,6 @@ class CrawlEngine:
         stats.snapshot_id = self.store.publish(
             sid, staged, meta=self._meta("round", stats=stats.__dict__ | {"extras": {}})
         )
-        _tmark("lineage+publish", _t)
         return stats
 
     def compact_frontier(self) -> None:
@@ -684,31 +663,12 @@ class CrawlEngine:
             "url_canon", U.canonicalize(F.col("url"))
         ).select("url_canon").distinct().persist()
         n = targets.count()
-        if n == 0:
-            targets.unpersist()
-            return 0
-
-        base = (self.round + 1) * ROUND_BASE
-        w = Window.orderBy("url_canon")
-        requeue = (
-            targets.withColumn("url", F.col("url_canon"))
-            .withColumn("host", U.host_of(F.col("url_canon")))
-            .withColumn("group_id", U.group_id_of(F.col("url_canon")))
-            .withColumn("post_id", U.post_id_of(F.col("url_canon")))
-            .withColumn("kind", F.lit("post"))
-            .withColumn("depth", F.lit(self.round))
-            .withColumn("priority", F.lit(4))  # repairs drain first
-            .withColumn("enqueued_seq", F.lit(base) + F.row_number().over(w))
-            .withColumn("discovered_ts", F.lit(self.round).cast("long"))
-            .withColumn("state", F.lit("pending"))
-            .withColumn("attempts", F.lit(0))
-            .withColumn("event_seq", F.col("enqueued_seq"))
-            .select(*[f.name for f in FRONTIER_EVENT_SCHEMA.fields])
-        )
-        self.round += 1
-        if self._pending_est is not None:
-            self._pending_est += n
-        self.store.commit({"frontier": requeue}, meta=self._meta("repair"))
+        if n:
+            src = targets.select(
+                F.col("url_canon").alias("url"), "url_canon",
+                U.group_id_of(F.col("url_canon")).alias("group_id"),
+            )
+            self._requeue(src, n, kind="post", priority=4, phase="repair")  # drain first
         targets.unpersist()
         return n
 
@@ -740,33 +700,34 @@ class CrawlEngine:
             F.col("page_id").alias("group_id"),
         ).persist()
         n = requeue_src.count()
-        if n == 0:
-            requeue_src.unpersist()
-            return 0
+        if n:
+            src = requeue_src.withColumn("url_canon", U.canonicalize(F.col("url")))
+            self._requeue(
+                src, n, kind="comment", priority=3, phase="recrawl_comments", reset=reset
+            )
+        requeue_src.unpersist()
+        return n
+
+    def _requeue(
+        self, src: DataFrame, n: int, kind: str, priority: int, phase: str, **meta
+    ) -> None:
+        """Commit the ``n`` rows of ``src(url, url_canon, group_id)`` as
+        pending ``kind`` frontier entries at ``priority``, sequenced in
+        url_canon order by the distributed rank (no single-task window)."""
         base = (self.round + 1) * ROUND_BASE
-        w = Window.orderBy("url_canon")
-        requeue = (
-            requeue_src.withColumn("url_canon", U.canonicalize(F.col("url")))
+        requeue = _pending_events(
+            S.distributed_row_number(src, [F.asc("url_canon")], "__r", n_rows_hint=n)
             .withColumn("host", U.host_of(F.col("url_canon")))
             .withColumn("post_id", U.post_id_of(F.col("url_canon")))
-            .withColumn("kind", F.lit("comment"))
-            .withColumn("depth", F.lit(self.round))
-            .withColumn("priority", F.lit(3))
-            .withColumn("enqueued_seq", F.lit(base) + F.row_number().over(w))
-            .withColumn("discovered_ts", F.lit(self.round).cast("long"))
-            .withColumn("state", F.lit("pending"))
-            .withColumn("attempts", F.lit(0))
-            .withColumn("event_seq", F.col("enqueued_seq"))
-            .select(*[f.name for f in FRONTIER_EVENT_SCHEMA.fields])
+            .withColumn("kind", F.lit(kind))
+            .withColumn("priority", F.lit(priority))
+            .withColumn("enqueued_seq", F.lit(base) + F.col("__r")),
+            depth=self.round,
         )
         self.round += 1
         if self._pending_est is not None:
             self._pending_est += n
-        self.store.commit(
-            {"frontier": requeue}, meta=self._meta("recrawl_comments", reset=reset)
-        )
-        requeue_src.unpersist()
-        return n
+        self.store.commit({"frontier": requeue}, meta=self._meta(phase, **meta))
 
     def reset_transient_queues(self, kinds: tuple = ("reaction", "comment")) -> int:
         """U3 queue-reset-on-resume (Facebook_group_reaction.py:91-93): the
@@ -795,16 +756,15 @@ class CrawlEngine:
         """True URL-seen retraction (expiry / purge / re-crawl-after-change):
         remove ``urls(url_canon)`` from the seen set so future *discovery*
         re-enqueues them. Bloom shards cannot delete, so the seen table is
-        replaced and shards rebuilt at a new version; hosts with frequent
-        retraction would instead carry deletable cuckoo shards
-        (operators.dedup.CuckooFilter) — same bucketing, per-item delete.
-        Frontier events for the forgotten URLs are dropped in the same commit
-        (an URL that is both 'fetched' in the frontier and absent from seen
-        would never be re-dispatched)."""
-        # Only retract URLs that are actually in the seen set: a cuckoo delete
-        # of a never-inserted URL can evict a colliding fingerprint belonging
-        # to a *different* seen URL (standard cuckoo-delete precondition),
-        # creating a false negative that re-enqueues that other URL.
+        replaced and every shard rebuilt from it at ``bloom_version + 1``.
+        Retraction is a rare admin job; the rebuild is one vectorized pass
+        per shard. Frontier events for the forgotten URLs are dropped in the
+        same commit (an URL that is both 'fetched' in the frontier and
+        absent from seen would never be re-dispatched). Returns the number
+        of seen URLs forgotten."""
+        # Only URLs that are actually in the seen set count: the semi-join
+        # gives the return value, and a call that matches none commits
+        # nothing (no rebuild, no version bump).
         targets = (
             urls.select("url_canon").distinct()
             .join(self.seen_df().select("url_canon").distinct(), "url_canon", "left_semi")
@@ -823,13 +783,8 @@ class CrawlEngine:
         self._pending_est = new_frontier.filter(F.col("state") == "pending").count()
         self.round += 1
         if self.use_bloom:
-            if hasattr(self.bloom, "delete"):
-                # cuckoo shards: incremental per-item retraction
-                self.bloom_version = self.bloom.delete(targets, self.bloom_version)
-            else:
-                # bloom shards cannot delete → rebuild at a new version
-                self.bloom_version += 1
-                self.bloom.build(new_seen, version=self.bloom_version)
+            self.bloom_version += 1
+            self.bloom.build(new_seen, version=self.bloom_version)
         self.store.commit(
             {"frontier": new_frontier, "seen": new_seen},
             meta=self._meta("forget"),

@@ -16,8 +16,9 @@ network round-trip per row. Here the same semantics are a set problem:
   negatives); only the positives (~fpr of the new mass) go through the exact
   anti-join. At steady state this turns an O(|frontier|+|seen|) shuffle into
   an O(|frontier|) map plus a tiny join.
-- **cuckoo** shards for hosts that need retraction (re-crawl after repair,
-  §2.8 T7): same sharding, but deletable fingerprints.
+
+Bloom shards cannot delete: retracting a URL (``CrawlEngine.forget_urls``)
+rebuilds every shard from the remaining seen set at a new version.
 
 Shard versions are monotonic and recorded in checkpoint lineage (north rule):
 a probe must never use a shard *newer* than the frontier snapshot it gates.
@@ -25,7 +26,6 @@ a probe must never use a shard *newer* than the frontier snapshot it gates.
 
 from __future__ import annotations
 
-import hashlib
 import math
 import os
 import shutil
@@ -36,19 +36,19 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Per-python-worker shard cache, keyed (kind, bucket) -> (path, shard).
+# Per-python-worker shard cache, keyed bucket -> (path, shard).
 # Versions are monotonic and probes always use the newest committed version,
-# so caching one entry per (kind, bucket) and evicting the prior version on
-# miss keeps worker memory O(buckets-touched), not O(buckets × rounds).
-_WORKER_CACHE: dict[tuple, tuple] = {}
+# so caching one entry per bucket and evicting the prior version on miss
+# keeps worker memory O(buckets-touched), not O(buckets × rounds).
+_WORKER_CACHE: dict[int, tuple] = {}
 
 
-def _cache_get(kind: str, bucket: int, path: str, loader):
-    entry = _WORKER_CACHE.get((kind, bucket))
+def _cache_get(bucket: int, path: str, loader):
+    entry = _WORKER_CACHE.get(bucket)
     if entry is not None and entry[0] == path:
         return entry[1]
     shard = loader(path)
-    _WORKER_CACHE[(kind, bucket)] = (path, shard)  # evicts the old version
+    _WORKER_CACHE[bucket] = (path, shard)  # evicts the old version
     return shard
 
 
@@ -244,7 +244,7 @@ class BloomStore:
                 return (z["bits"].copy(), int(z["m"]), int(z["k"]))
 
         def _probe_block(pdf: pd.DataFrame, bucket: int, idx) -> np.ndarray:
-            bits, m, k = _cache_get("bloom", bucket, shard_file(version, bucket), _load)
+            bits, m, k = _cache_get(bucket, shard_file(version, bucket), _load)
             h1 = pdf["__h1"].to_numpy(dtype=np.int64)[idx]
             h2 = pdf["__h2"].to_numpy(dtype=np.int64)[idx]
             res = np.ones(len(h1), dtype=bool)
@@ -296,112 +296,6 @@ class BloomStore:
         return total
 
 
-class CuckooStore:
-    """Versioned, partitioned cuckoo-filter shards — the deletable
-    counterpart of BloomStore for hosts with retraction churn (re-crawl
-    after expiry/repair): same bucketing and file layout
-    (``<path>/cuckoo/v<version>/shard_<bucket>.npz``), same probe contract
-    (``maybe_seen``; no false negatives), plus ``delete``. ``forget_urls``
-    becomes an O(|deleted|) shard rewrite instead of a full filter rebuild.
-    """
-
-    def __init__(self, path: str, n_shards: int = 64, capacity_per_shard: int = 1 << 16):
-        self.path = path
-        self.n_shards = n_shards
-        self.capacity = capacity_per_shard
-
-    def _shard_file(self, version: int, bucket: int) -> str:
-        return os.path.join(self.path, "cuckoo", f"v{version}", f"shard_{bucket}.npz")
-
-    def latest_version(self) -> int:
-        base = os.path.join(self.path, "cuckoo")
-        if not os.path.isdir(base):
-            return 0
-        vs = [int(d[1:]) for d in os.listdir(base) if d.startswith("v")]
-        return max(vs, default=0)
-
-    def _apply(self, df: DataFrame, from_version: int | None, version: int,
-               op: str) -> None:
-        n_shards, cap = self.n_shards, self.capacity
-        shard_file = self._shard_file
-        _clear_version(os.path.dirname(shard_file(version, 0)))
-
-        def run(pdf: pd.DataFrame) -> pd.DataFrame:
-            bucket = int(pdf["bucket"].iloc[0])
-            if from_version is None:
-                cf = CuckooFilter(capacity=cap)
-            else:
-                cf = CuckooFilter.load(shard_file(from_version, bucket))
-            if op == "insert":
-                # The probe contract ("no false negatives") is load-bearing:
-                # dedup_bloom_gated skips the exact anti-join for filter
-                # negatives, so a silently dropped insert would re-enqueue
-                # already-seen URLs forever. A full shard must fail the job
-                # (the caller rebuilds at a larger capacity_per_shard from the
-                # seen table), never lose membership.
-                dropped = sum(0 if cf.insert(u) else 1 for u in pdf["url_canon"])
-                if dropped:
-                    raise RuntimeError(
-                        f"cuckoo shard {bucket} overflow: {dropped}/{len(pdf)} inserts "
-                        f"failed at capacity {cap}; rebuild the CuckooStore from the "
-                        f"seen table with a larger capacity_per_shard"
-                    )
-            else:
-                for u in pdf["url_canon"]:
-                    cf.delete(u)
-            cf.save(shard_file(version, bucket))
-            return pd.DataFrame({"bucket": [bucket]})
-
-        per_bucket = df.select(
-            F.col("url_canon"), bucket_of(F.col("url_canon"), n_shards).alias("bucket")
-        )
-        touched = {
-            r.bucket
-            for r in per_bucket.groupBy("bucket").applyInPandas(run, "bucket int").collect()
-        }
-        for b in range(n_shards):
-            if b not in touched:
-                dst = self._shard_file(version, b)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                if from_version is None:
-                    CuckooFilter(capacity=cap).save(dst)
-                else:
-                    src = self._shard_file(from_version, b)
-                    try:
-                        os.link(src, dst)
-                    except OSError:
-                        shutil.copyfile(src, dst)
-
-    def build(self, seen: DataFrame, version: int = 1) -> int:
-        self._apply(seen, None, version, "insert")
-        return version
-
-    def add(self, new: DataFrame, from_version: int) -> int:
-        self._apply(new, from_version, from_version + 1, "insert")
-        return from_version + 1
-
-    def delete(self, gone: DataFrame, from_version: int) -> int:
-        self._apply(gone, from_version, from_version + 1, "delete")
-        return from_version + 1
-
-    def probe(self, df: DataFrame, version: int, url_col: str = "url_canon") -> DataFrame:
-        n_shards = self.n_shards
-        shard_file = self._shard_file
-        cols = df.columns
-        out_schema = ", ".join(f"`{c}` {df.schema[c].dataType.simpleString()}" for c in cols)
-        out_schema += ", maybe_seen boolean"
-
-        def probe_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-            bucket = int(pdf["__bucket"].iloc[0])
-            cf = _cache_get("cuckoo", bucket, shard_file(version, bucket), CuckooFilter.load)
-            out = pdf.drop(columns=["__bucket"])
-            out["maybe_seen"] = [cf.contains(u) for u in pdf[url_col]]
-            return out
-
-        with_bucket = df.withColumn("__bucket", bucket_of(F.col(url_col), n_shards))
-        return with_bucket.groupBy("__bucket").applyInPandas(probe_shard, out_schema)
-
-
 def dedup_exact(candidates: DataFrame, seen: DataFrame, key: str = "url_canon") -> DataFrame:
     """Plain left-anti dedup (J1/J2/J3 semantics)."""
     return candidates.join(seen.select(key).distinct(), on=key, how="left_anti")
@@ -433,86 +327,3 @@ def dedup_bloom_gated(
     confirmed_new = suspects.join(seen.select(key).distinct(), on=key, how="left_anti")
     return fresh.unionByName(confirmed_new)
 
-
-# ---------------------------------------------------------------------------
-# Cuckoo filter (deletable membership) — fallback shard type for hosts that
-# need retraction (repair/re-crawl, SURVEY §2.8 T7).
-# ---------------------------------------------------------------------------
-class CuckooFilter:
-    """Bucketed cuckoo filter: 4 slots/bucket, 16-bit fingerprints.
-
-    Supports insert / contains / delete with the standard partial-key cuckoo
-    scheme (Fan et al., CoNEXT'14 — public algorithm). numpy-backed, and
-    serializable to npz so it can shard exactly like BloomStore.
-    """
-
-    SLOTS = 4
-    MAX_KICKS = 500
-
-    def __init__(self, capacity: int, seed: int = 7):
-        n_buckets = 1
-        while n_buckets * self.SLOTS < capacity * 2:
-            n_buckets *= 2
-        self.n_buckets = n_buckets
-        self.table = np.zeros((n_buckets, self.SLOTS), dtype=np.uint16)
-        self.seed = seed
-        self._rng = np.random.default_rng(seed)
-
-    def _fp_and_index(self, item: str) -> tuple[int, int]:
-        d = hashlib.blake2b(item.encode("utf-8"), digest_size=16).digest()
-        fp = (int.from_bytes(d[:2], "little") % 65535) + 1  # never 0
-        i1 = int.from_bytes(d[2:10], "little") % self.n_buckets
-        return fp, i1
-
-    def _alt_index(self, i: int, fp: int) -> int:
-        d = hashlib.blake2b(fp.to_bytes(2, "little"), digest_size=8).digest()
-        return (i ^ (int.from_bytes(d, "little") % self.n_buckets)) % self.n_buckets
-
-    def insert(self, item: str) -> bool:
-        fp, i1 = self._fp_and_index(item)
-        i2 = self._alt_index(i1, fp)
-        for i in (i1, i2):
-            row = self.table[i]
-            empty = np.where(row == 0)[0]
-            if len(empty):
-                row[empty[0]] = fp
-                return True
-        i = int(self._rng.choice([i1, i2]))
-        for _ in range(self.MAX_KICKS):
-            slot = int(self._rng.integers(0, self.SLOTS))
-            fp, self.table[i, slot] = int(self.table[i, slot]), fp
-            i = self._alt_index(i, fp)
-            row = self.table[i]
-            empty = np.where(row == 0)[0]
-            if len(empty):
-                row[empty[0]] = fp
-                return True
-        return False  # table full
-
-    def contains(self, item: str) -> bool:
-        fp, i1 = self._fp_and_index(item)
-        i2 = self._alt_index(i1, fp)
-        return bool((self.table[i1] == fp).any() or (self.table[i2] == fp).any())
-
-    def delete(self, item: str) -> bool:
-        fp, i1 = self._fp_and_index(item)
-        for i in (i1, self._alt_index(i1, fp)):
-            hits = np.where(self.table[i] == fp)[0]
-            if len(hits):
-                self.table[i, hits[0]] = 0
-                return True
-        return False
-
-    def save(self, path: str) -> None:
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        np.savez(path, table=self.table, seed=self.seed)
-
-    @classmethod
-    def load(cls, path: str) -> "CuckooFilter":
-        with np.load(path) as z:
-            cf = cls.__new__(cls)
-            cf.table = z["table"].copy()
-            cf.n_buckets = cf.table.shape[0]
-            cf.seed = int(z["seed"])
-            cf._rng = np.random.default_rng(cf.seed)
-            return cf

@@ -16,9 +16,8 @@ Reference semantics reproduced here:
 - **Repair stream (T7)**: ``debug_empty_text.py:111-126`` re-crawls posts
   whose extracted text is empty and patches them. Batch form:
   ``plan_repair`` finds the target URLs, retracts them from the URL-seen set
-  (the retraction case the Bloom filter cannot serve — the seen table is
-  replaced and shards rebuilt; hosts needing frequent retraction would carry
-  cuckoo shards instead, operators.dedup.CuckooFilter), and re-enqueues them
+  (Bloom shards cannot delete, so the seen table is replaced and every
+  shard rebuilt at a new version), and re-enqueues them
   at reaction-level priority so the repair drains first.
 """
 

@@ -4,7 +4,6 @@ from pyspark.sql import functions as F
 
 from facebook_page_scrapy_spark.operators.dedup import (
     BloomStore,
-    CuckooFilter,
     dedup_bloom_gated,
     dedup_exact,
 )
@@ -53,45 +52,9 @@ def test_bloom_gated_equals_exact(spark, tmp_path):
     assert gated == exact == {f"s://new/{i}" for i in range(300)}
 
 
-def test_cuckoo_roundtrip():
-    cf = CuckooFilter(capacity=1000)
-    items = [f"u://{i}" for i in range(800)]
-    assert all(cf.insert(i) for i in items)
-    assert all(cf.contains(i) for i in items)
-    for i in items[:400]:
-        assert cf.delete(i)
-    # deleted items gone (no false negatives on remaining)
-    assert all(cf.contains(i) for i in items[400:])
-    missing = sum(cf.contains(i) for i in items[:400])
-    assert missing / 400 < 0.05  # residual fp only
-
-
-def test_cuckoo_save_load(tmp_path):
-    cf = CuckooFilter(capacity=100)
-    cf.insert("hello")
-    p = str(tmp_path / "c" / "shard.npz")
-    cf.save(p)
-    cf2 = CuckooFilter.load(p)
-    assert cf2.contains("hello") and not cf2.contains("bye")
-
-
-def test_cuckoo_store_overflow_raises(spark, tmp_path):
-    """A full cuckoo shard must FAIL the job, not silently drop inserts:
-    the probe contract (no false negatives) is load-bearing for
-    dedup_bloom_gated, which skips the exact anti-join on filter negatives."""
-    import pytest
-
-    from facebook_page_scrapy_spark.operators.dedup import CuckooStore
-
-    store = CuckooStore(str(tmp_path / "f"), n_shards=1, capacity_per_shard=8)
-    urls = [f"https://h.example/p/{i}" for i in range(2000)]  # >> capacity
-    with pytest.raises(Exception, match="overflow"):
-        store.build(_urls(spark, urls), version=1)
-
-
 def test_worker_cache_evicts_old_versions(tmp_path):
     """The per-worker shard cache keeps only the newest version per
-    (kind, bucket): bloom_version increments every round, so version-keyed
+    bucket: bloom_version increments every round, so version-keyed
     entries would grow without bound in long-lived python workers."""
     from facebook_page_scrapy_spark.operators import dedup as D
 
@@ -102,40 +65,13 @@ def test_worker_cache_evicts_old_versions(tmp_path):
         loads.append(path)
         return f"shard@{path}"
 
-    assert D._cache_get("bloom", 3, "/v1/shard_3", loader) == "shard@/v1/shard_3"
-    assert D._cache_get("bloom", 3, "/v1/shard_3", loader) == "shard@/v1/shard_3"
+    assert D._cache_get(3, "/v1/shard_3", loader) == "shard@/v1/shard_3"
+    assert D._cache_get(3, "/v1/shard_3", loader) == "shard@/v1/shard_3"
     assert loads == ["/v1/shard_3"]  # cached
-    assert D._cache_get("bloom", 3, "/v2/shard_3", loader) == "shard@/v2/shard_3"
-    assert len([k for k in D._WORKER_CACHE if k == ("bloom", 3)]) == 1
-    assert D._WORKER_CACHE[("bloom", 3)][0] == "/v2/shard_3"  # v1 evicted
+    assert D._cache_get(3, "/v2/shard_3", loader) == "shard@/v2/shard_3"
+    assert len([k for k in D._WORKER_CACHE if k == 3]) == 1
+    assert D._WORKER_CACHE[3][0] == "/v2/shard_3"  # v1 evicted
     D._WORKER_CACHE.clear()
-
-
-def test_cuckoo_store_shards_delete_and_probe(spark, tmp_path):
-    """Sharded cuckoo store: same probe contract as BloomStore plus
-    incremental delete — the retraction path forget_urls uses for
-    high-churn hosts."""
-    from facebook_page_scrapy_spark.operators.dedup import CuckooStore
-
-    store = CuckooStore(str(tmp_path / "f"), n_shards=4, capacity_per_shard=4096)
-    urls = [f"https://h{i % 5}.example/p/{i}" for i in range(1000)]
-    store.build(_urls(spark, urls), version=1)
-
-    flagged = store.probe(_urls(spark, urls), version=1)
-    assert flagged.filter(~F.col("maybe_seen")).count() == 0  # no false negatives
-
-    v2 = store.delete(_urls(spark, urls[:500]), from_version=1)
-    assert v2 == 2
-    kept = store.probe(_urls(spark, urls[500:]), version=2)
-    assert kept.filter(~F.col("maybe_seen")).count() == 0  # survivors intact
-    gone = store.probe(_urls(spark, urls[:500]), version=2)
-    assert gone.filter(F.col("maybe_seen")).count() / 500 < 0.05  # residual fp only
-    # version 1 untouched (time travel)
-    old = store.probe(_urls(spark, urls[:500]), version=1)
-    assert old.filter(~F.col("maybe_seen")).count() == 0
-
-    v3 = store.add(_urls(spark, ["https://new.example/x"]), from_version=2)
-    assert store.probe(_urls(spark, ["https://new.example/x"]), v3).collect()[0].maybe_seen
 
 
 def test_probe_mapside_equals_shuffle(spark, tmp_path):

@@ -118,9 +118,15 @@ def test_forget_urls_allows_rediscovery(spark, tmp_path):
     assert n_first == len(site.nodes)
 
     target = next(u for u, n in site.nodes.items() if n.kind == "post")
-    forgotten = eng.forget_urls(spark.createDataFrame([(target,)], "url_canon string"))
+    target_df = spark.createDataFrame([(target,)], "url_canon string")
+    v_before = eng.bloom_version
+    forgotten = eng.forget_urls(target_df)
     assert forgotten == 1
     assert target not in eng.seen_set()
+    # one rebuild at the next filter version, and a probe there reports the
+    # retracted url as unseen
+    assert eng.bloom_version == v_before + 1
+    assert not eng.bloom.probe(target_df, eng.bloom_version).collect()[0].maybe_seen
 
     # the page that links it is also forgotten? no — re-seed the page crawl:
     # re-enqueue the seed page by forgetting it too, then crawl again
@@ -250,31 +256,3 @@ def test_get_post_field_nested_path_probe(spark, tmp_path):
     assert E.get_post_field(nested, gid, pid, ["info", "nope"]) is None
     assert E.get_post_field(nested, gid, pid, []) is None
 
-
-def test_cuckoo_filter_kind_end_to_end(spark, tmp_path):
-    """Engine with cuckoo shards: same crawl results as bloom; forget_urls
-    retracts incrementally (one shard version bump, no rebuild) and the URL
-    is re-discoverable."""
-    from facebook_page_scrapy_spark.simulator import simulate
-
-    site = datagen.make_site(n_groups=1, pages_per_group=2, posts_per_page=2, seed=91)
-    sim = simulate(site)
-    _, corpus = datagen.site_to_dataframes(spark, site)
-    eng = CrawlEngine(spark, str(tmp_path / "c"), CorpusFetcher(corpus),
-                      default_tokens=500, use_bloom=True, n_bloom_shards=4,
-                      filter_kind="cuckoo")
-    eng.seed(site.seeds)
-    eng.run(max_rounds=20)
-    assert eng.seen_set() == sim.seen
-    assert sorted(eng.fetch_order()) == sorted(sim.fetch_order)
-
-    target = next(u for u, n in site.nodes.items() if n.kind == "post")
-    v_before = eng.bloom_version
-    assert eng.forget_urls(spark.createDataFrame([(target,)], "url_canon string")) == 1
-    assert eng.bloom_version == v_before + 1
-    assert target not in eng.seen_set()
-    # probe at the new version: retracted url is (almost surely) unseen
-    flagged = eng.bloom.probe(
-        spark.createDataFrame([(target,)], "url_canon string"), eng.bloom_version
-    ).collect()[0]
-    assert not flagged.maybe_seen

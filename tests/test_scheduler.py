@@ -233,16 +233,20 @@ def test_rank_weighted_dispatch_unknown_host_floor(spark):
 # ---------------------------------------------------------------------------
 
 def _partitionless_windows(df):
-    """Walk the executed physical plan; return WindowExec nodes whose
-    partitionSpec is empty (the single-task global-sort funnel)."""
+    """Walk the executed physical plan, into the plans of cached relations;
+    return WindowExec nodes whose partitionSpec is empty (the single-task
+    global-sort funnel)."""
     df.collect()
     bad = []
     stack = [df._jdf.queryExecution().executedPlan()]
     while stack:
         node = stack.pop()
-        if node.getClass().getSimpleName() in ("WindowExec", "WindowGroupLimitExec"):
+        name = node.getClass().getSimpleName()
+        if name in ("WindowExec", "WindowGroupLimitExec"):
             if node.partitionSpec().isEmpty():
                 bad.append(node.nodeName())
+        elif name == "InMemoryTableScanExec":
+            stack.append(node.relation().cachedPlan())
         for i in range(node.children().size()):
             stack.append(node.children().apply(i))
     return bad
@@ -311,3 +315,40 @@ def test_discovery_rank_plan_has_no_partitionless_window(spark):
             F.count_distinct("__r").alias("d"),
         ).collect()[0]
         assert (agg.n, agg.lo, agg.hi, agg.d) == (4000, 1, 4000, 4000), n_rows_hint
+
+
+def test_seed_and_requeue_deltas_have_no_partitionless_window(spark, tmp_path, monkeypatch):
+    """The frontier rows that seeding, the empty-text repair and the comment
+    recrawl commit carry no partition-less WindowExec: seed sequence numbers
+    come with the driver-side seed list, and the requeues rank through
+    distributed_row_number."""
+    from facebook_page_scrapy_spark import datagen
+    from facebook_page_scrapy_spark.crawl import CrawlEngine
+    from facebook_page_scrapy_spark.operators.fetch import CorpusFetcher
+
+    site = datagen.make_site(
+        n_groups=1, pages_per_group=1, posts_per_page=2,
+        comments_per_post=3, four_level=True, seed=71,
+    )
+    # media-only body → the extractor yields text='' → one repair target
+    node = next(n for n in site.nodes.values() if n.kind == "post")
+    node.html = datagen.render_post_html(
+        node.group_id, node.post_id, 1650000000, '<img src="https://cdn.example/x.jpg" />', ""
+    )
+    _, corpus = datagen.site_to_dataframes(spark, site)
+    eng = CrawlEngine(spark, str(tmp_path / "c"), CorpusFetcher(corpus),
+                      default_tokens=500, n_bloom_shards=4, four_level=True)
+    windows = {}
+    commit = eng.store.commit
+
+    def spy(deltas, meta=None, replace=None):
+        if meta["phase"] in ("seed", "repair", "recrawl_comments"):
+            windows[meta["phase"]] = _partitionless_windows(deltas["frontier"])
+        return commit(deltas, meta=meta, replace=replace)
+
+    monkeypatch.setattr(eng.store, "commit", spy)
+    eng.seed(site.seeds)
+    eng.run(max_rounds=10)
+    assert eng.repair_empty_text() == 1
+    assert eng.recrawl_comments(reset=True) == 2
+    assert windows == {"seed": [], "repair": [], "recrawl_comments": []}

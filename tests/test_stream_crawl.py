@@ -1,43 +1,7 @@
-"""Self-feeding streaming crawl vs the batch engine: same site, same seeds →
-same URL-seen set and same parsed posts. The stream's dropDuplicates state
-plays the bloom's role; micro-batches play rounds."""
+"""Structured Streaming replay harness: a table replayed as a multi-file
+stream, where stateful aggregation must carry state across micro-batches."""
 
 from __future__ import annotations
-
-from facebook_page_scrapy_spark import datagen
-from facebook_page_scrapy_spark.crawl import CrawlEngine
-from facebook_page_scrapy_spark.operators.fetch import CorpusFetcher
-from facebook_page_scrapy_spark.streaming.stream_crawl import stream_crawl
-
-
-def test_stream_crawl_matches_batch_engine(spark, tmp_path):
-    site = datagen.make_site(n_groups=2, pages_per_group=2, posts_per_page=2, seed=43)
-    _, corpus = datagen.site_to_dataframes(spark, site)
-    fetcher = CorpusFetcher(corpus)
-
-    eng = CrawlEngine(
-        spark, str(tmp_path / "ckpt_batch"), fetcher,
-        default_tokens=100, use_bloom=True, n_bloom_shards=4,
-    )
-    eng.seed(site.seeds)
-    eng.run(max_rounds=30)
-
-    seeds = [f"https://mbasic.facebook.com/groups/{g}" for g in site.seeds]
-    res = stream_crawl(spark, fetcher, seeds, str(tmp_path / "stream"))
-
-    log = spark.read.parquet(res["fetch_log"])
-    stream_seen = {r.url_canon for r in log.select("url_canon").distinct().collect()}
-    assert stream_seen == eng.seen_set()
-    # the streaming dedup state must make dispatch exactly-once per URL
-    assert log.count() == log.select("url_canon").distinct().count()
-
-    rec = spark.read.parquet(res["records"])
-    stream_posts = {
-        r.post_id for r in rec.filter(rec.row_type == "post").select("post_id").collect()
-    }
-    batch_posts_df = eng.store.read(spark, "posts")
-    batch_posts = {r.post_id for r in batch_posts_df.select("post_id").collect()}
-    assert stream_posts == batch_posts and len(stream_posts) > 0
 
 
 def test_replay_table_stream_state_spans_microbatches(spark, tmp_path):

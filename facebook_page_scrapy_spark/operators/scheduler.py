@@ -39,20 +39,32 @@ def dispatch_order():
 
 
 def distributed_row_number(
-    df: DataFrame, order: list, out: str, n_rows_hint: int | None = None
+    df: DataFrame,
+    order: list,
+    out: str,
+    n_rows_hint: int | None = None,
+    rank_fn=F.row_number,
 ) -> DataFrame:
-    """Global ``row_number() OVER (ORDER BY order)`` without the
-    partition-less window's single-task sort.
+    """Global ``rank_fn() OVER (ORDER BY order)`` as a ``long`` column,
+    without the partition-less window's single-task sort.
 
-    Two-pass shape (the same form as queries._dist_rank / pack_sequences'
-    prefix sum): range-repartition by the sort key so partition p holds a
-    contiguous key slice, rank WITHIN each partition, then add each
-    partition's offset = total rows in all lower partitions. The order is
-    total for every caller here (enqueued_seq is unique by construction),
-    so the values are bit-identical to the global window — but each task
-    sorts only its own slice, where the global window funnels the whole
-    round's dispatch batch (millions of rows at a 10^10-URL frontier)
+    Two-pass shape: range-repartition by the sort key so partition p holds
+    a contiguous key slice, rank WITHIN each partition, then add each
+    partition's offset = the sum of ``max(local rank)`` over all lower
+    partitions. Each task sorts only its own slice, where the global window
+    funnels the whole batch (millions of rows at a 10^10-URL frontier)
     through ONE task.
+
+    ``rank_fn`` is a zero-argument callable returning a window function
+    (a callable, because a ``Column`` cannot be built at import time). The
+    offsets are correct only if ``rank_fn`` never decreases along
+    ``order`` — then a partition's ``max(local rank)`` is exactly its
+    contribution to every later partition. That holds for ``row_number``
+    (the default; the crawl's orders are total, so the values equal the
+    global window's), for ``dense_rank`` (the range partitioner puts equal
+    keys in one partition, so no distinct key is counted twice), and for a
+    running ``sum`` of non-negative values over a unique key (a distributed
+    prefix sum, e.g. ``rank_fn=lambda: F.sum("n_tokens")``).
 
     The ranked blocks are eagerly ``localCheckpoint``-ed so the offsets
     branch and the output branch read the SAME frozen partition ids — the
@@ -79,7 +91,7 @@ def distributed_row_number(
             .withColumn("__pid", F.spark_partition_id())
             .withColumn(
                 out,
-                F.row_number().over(Window.partitionBy("__pid").orderBy(*order)).cast("int"),
+                rank_fn().over(Window.partitionBy("__pid").orderBy(*order)).cast("long"),
             )
             .drop("__pid")
             .localCheckpoint(eager=True)
@@ -103,7 +115,7 @@ def distributed_row_number(
         df.repartitionByRange(parts, *order)
         .withColumn("__pid", F.spark_partition_id())
         .withColumn(
-            "__lr", F.row_number().over(Window.partitionBy("__pid").orderBy(*order))
+            "__lr", rank_fn().over(Window.partitionBy("__pid").orderBy(*order))
         )
         .localCheckpoint(eager=True)
     )
@@ -121,7 +133,7 @@ def distributed_row_number(
     )
     return (
         local.join(F.broadcast(offs), "__pid")
-        .withColumn(out, (F.col("__lr") + F.col("__prefix")).cast("int"))
+        .withColumn(out, (F.col("__lr") + F.col("__prefix")).cast("long"))
         .drop("__pid", "__lr", "__prefix")
     )
 

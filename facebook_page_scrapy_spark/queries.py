@@ -52,6 +52,7 @@ from pyspark.sql import functions as F
 from facebook_page_scrapy_spark.functions import text as T
 from facebook_page_scrapy_spark.functions import urls as U
 from facebook_page_scrapy_spark.operators import docops as DO
+from facebook_page_scrapy_spark.operators import scheduler as S
 
 # --------------------------------------------------------------------------
 # helpers
@@ -1339,8 +1340,7 @@ def q_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     into a scan of the corpus band index — the corpus is never shuffled, and
     the whole admission decision is one streamed pass + one id-only anti-join.
     That asymmetry is what makes daily ingestion O(batch), not O(corpus),
-    at 100 TB; the corpus band index itself is the bucketed layout
-    `state/bucketed.py` persists."""
+    at 100 TB."""
     sig = q_minhash_signatures(spark, sf_dir)
     # persist: existing scan + broadcast incoming are two branches of the
     # same expensive mapInPandas subtree — without this it runs twice
@@ -3205,43 +3205,19 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     training sequences; each doc reports the sequence it starts in, its
     offset there, and how many sequences it spans.
 
-    The global running token count is computed as a DISTRIBUTED two-pass
-    prefix sum, not a single global window: (1) range-repartition by doc_id
-    so partition order matches key order, (2) per-partition token totals —
-    one tiny row per partition — are prefix-summed and broadcast back, (3) a
-    per-partition window (parallel; partitioned by partition id) adds the
-    local running sum to the partition's prefix. Same values as a global
-    ORDER BY window, but no single-partition bottleneck at 100 TB — the only
-    serial state is one row per partition."""
+    The global running token count is a distributed prefix sum —
+    scheduler.distributed_row_number with a running ``sum`` as its rank:
+    range-partition by doc_id, sum within each partition, add the token
+    totals of all lower partitions. Same values as a global ORDER BY
+    window, but no single-partition bottleneck at 100 TB — the only serial
+    state is one row per partition."""
     docs = (
         _t(spark, sf_dir, "documents")
         .select("doc_id", T.token_count_ws(F.col("text")).cast("long").alias("n_tokens"))
         .filter(F.col("n_tokens") > 0)
     )
-    parts = max(2, spark.sparkContext.defaultParallelism)
-    # persist() pins ONE materialization of the range exchange: `pid` feeds
-    # two plan branches (per-partition totals, final join), and without the
-    # cache their consistency would silently depend on Spark's exchange-reuse
-    # canonicalization (spark.sql.exchange.reuse) — a re-executed
-    # RangePartitioner may sample different boundaries, skewing every
-    # seq_id/seq_offset. The cached relation makes both branches read the
-    # same partitioning by construction.
-    d = docs.repartitionByRange(parts, "doc_id").withColumn(
-        "pid", F.spark_partition_id()
-    ).persist()
-    per = d.groupBy("pid").agg(F.sum("n_tokens").alias("psum"))
-    wp = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = per.select(
-        "pid", F.coalesce(F.sum("psum").over(wp), F.lit(0)).alias("prefix")
-    )
-    w = (
-        Window.partitionBy("pid")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = (
-        d.join(F.broadcast(offsets), "pid")
-        .withColumn("cum", F.sum("n_tokens").over(w) + F.col("prefix"))
+    cum = S.distributed_row_number(
+        docs, ["doc_id"], "cum", rank_fn=lambda: F.sum("n_tokens")
     )
     start = F.col("cum") - F.col("n_tokens")
     seq_id = F.floor(start / _PACK_SEQ_LEN).cast("long")
@@ -4527,9 +4503,9 @@ def _rank_share_curve(
     """Shared rank / share_e6 / cumulative-share window block used by
     frontier_skew_report and vocab_coverage: the input is already aggregated
     to one row per key (dim-sized), so the single-partition window is fine;
-    swap it for the pack_sequences two-pass prefix sum if the key
-    cardinality ever outgrows one task. Integer micro-units (e6 + div) keep
-    the curve bit-identical cross-engine."""
+    swap it for scheduler.distributed_row_number (rank and running sum) if
+    the key cardinality ever outgrows one task. Integer micro-units (e6 +
+    div) keep the curve bit-identical cross-engine."""
     w = Window.orderBy(F.col(count_col).desc(), F.col(key_col).asc())
     cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     tot = Window.partitionBy()
@@ -4589,9 +4565,9 @@ def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the corpus do the top-k terms cover": term frequencies ranked
     hottest-first with share and cumulative share of all token occurrences,
     top 50. The explode→count is one partial-agg exchange; rank/cumsum run
-    on the term table (rows = vocab size), where the two-pass prefix-sum
-    form (pack_sequences) replaces the single-partition window once the
-    vocabulary outgrows one task. Ties break lexicographically so the curve
+    on the term table (rows = vocab size), where
+    scheduler.distributed_row_number replaces the single-partition window
+    once the vocabulary outgrows one task. Ties break lexicographically so the curve
     is deterministic cross-engine."""
     docs = _t(spark, sf_dir, "documents").select(T.words(F.col("text")).alias("ws"))
     tf = (
@@ -4882,89 +4858,22 @@ _SA_BASE_FULL = 16  # fixpoint mode: wider pivot skips one full rank round
 #   its smaller base exchange)
 
 
-def _dist_rank(df: DataFrame, cols: list, out: str, rank_fn) -> DataFrame:
-    """Distributed global ranking over ``cols`` — the same two-pass shape
-    as pack_sequences' prefix sum: range-repartition by the sort key
-    (equal keys co-locate by the range partitioner's construction), rank
-    WITHIN each partition, prefix-sum the per-partition rank maxima into
-    broadcast offsets, and add each partition's offset. Identical values
-    to a global ``ORDER BY`` window with none of its single-partition
-    bottleneck.
-
-    The partition-id invariant is structural: the per-partition local
-    ranks (with their ``__pid``) are eagerly localCheckpoint-ed in ONE
-    job, and the offsets branch aggregates the CHECKPOINTED blocks —
-    ``max(local rank)`` per pid IS the partition's key count (row count
-    for row_number, distinct-key count for dense_rank) — so both plan
-    branches read the same frozen pids by construction rather than by
-    persist-cache coherence. Costs one tiny aggregate job over the stored
-    blocks (32 partial rows) on top of the single materialization; the
-    checkpoint also truncates lineage for callers that rank in a loop
-    (the neardup_clusters lesson). The final broadcast-join + addition is
-    left lazy — consumers re-derive it from the stored blocks for
-    pennies, with no window recompute."""
-    spark = df.sparkSession
-    parts = max(2, spark.sparkContext.defaultParallelism)
-    w = Window.partitionBy("__pid").orderBy(*cols)
-    local = (
-        df.repartitionByRange(parts, *cols)
-        .withColumn("__pid", F.spark_partition_id())
-        .withColumn("__lr", rank_fn().over(w))
-        .localCheckpoint(eager=True)
-    )
-    wp = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = (
-        local.groupBy("__pid")
-        .agg(F.max("__lr").alias("__nc"))
-        .select(
-            "__pid",
-            F.coalesce(F.sum("__nc").over(wp), F.lit(0)).alias("__prefix"),
-        )
-    )
-    return (
-        local.join(F.broadcast(offs), "__pid")
-        .withColumn(out, (F.col("__lr") + F.col("__prefix")).cast("long"))
-        .drop("__pid", "__lr", "__prefix")
-    )
-
-
-def _dist_dense_rank(df: DataFrame, cols: list, out: str) -> DataFrame:
-    return _dist_rank(df, cols, out, F.dense_rank)
-
-
-def _dist_row_number(df: DataFrame, cols: list, out: str) -> DataFrame:
-    return _dist_rank(df, cols, out, F.row_number)
-
-
 def _token_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(gpos, doc_id, fp): the corpus as one global token stream —
     documents concatenated in doc_id order, token identity the same 8-char
-    polynomial fingerprint the MinHash family uses. Global positions come
-    from the pack_sequences distributed prefix sum over per-doc token
-    counts; no global window anywhere."""
+    polynomial fingerprint the MinHash family uses. A doc's first position
+    is its exclusive running token count: scheduler.distributed_row_number
+    with a running ``sum`` as the rank, minus the doc's own count; no
+    global window anywhere."""
     docs = (
         _t(spark, sf_dir, "documents")
         .select("doc_id", T.words(F.col("text")).alias("ws"))
         .withColumn("n", F.size("ws").cast("long"))
         .filter(F.col("n") > 0)
     )
-    parts = max(2, spark.sparkContext.defaultParallelism)
-    d = docs.repartitionByRange(parts, "doc_id").withColumn(
-        "pid", F.spark_partition_id()
-    ).persist()
-    per = d.groupBy("pid").agg(F.sum("n").alias("psum"))
-    wp = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = per.select(
-        "pid", F.coalesce(F.sum("psum").over(wp), F.lit(0)).alias("prefix")
-    )
-    wd = (
-        Window.partitionBy("pid")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    start = d.join(F.broadcast(offs), "pid").withColumn(
-        "st", F.coalesce(F.sum("n").over(wd), F.lit(0)) + F.col("prefix")
-    )
+    start = S.distributed_row_number(
+        docs, ["doc_id"], "cum", rank_fn=lambda: F.sum("n")
+    ).withColumn("st", F.col("cum") - F.col("n"))
     stream = start.select(
         "doc_id", "st", F.posexplode("ws").alias("pos", "wd")
     ).select(
@@ -4972,7 +4881,6 @@ def _token_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         (_word_fp(F.col("wd")) % _MH_P).alias("fp"),
     ).localCheckpoint(eager=True)
-    d.unpersist()  # the word arrays are the pipeline's heaviest intermediate
     return stream
 
 
@@ -5062,10 +4970,8 @@ def _suffix_ranks_loop(
         )
         .withColumnRenamed("g", "gpos")
     )
-    r = _dist_dense_rank(
-        base,
-        [f"f{j}" for j in range(bw)],
-        "r",
+    r = S.distributed_row_number(
+        base, [f"f{j}" for j in range(bw)], "r", rank_fn=F.dense_rank
     ).select("gpos", "doc_id", "r")
     k = bw
     done = False
@@ -5083,7 +4989,7 @@ def _suffix_ranks_loop(
             .withColumn("rk", F.coalesce("rk", F.lit(-1)))
             .select("gpos", "doc_id", "r", "rk")
         )
-        r = _dist_dense_rank(j, ["r", "rk"], "r2").select(
+        r = S.distributed_row_number(j, ["r", "rk"], "r2", rank_fn=F.dense_rank).select(
             "gpos", "doc_id", F.col("r2").alias("r")
         )
         k *= 2
@@ -5363,7 +5269,7 @@ def q_length_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select(
         T.token_count_ws(F.col("text")).cast("long").alias("len_tokens")
     )
-    ranked = _dist_row_number(docs, ["len_tokens"], "rn")
+    ranked = S.distributed_row_number(docs, ["len_tokens"], "rn")
     total = ranked.groupBy().agg(F.max("rn").alias("n"))
     deciles = spark.range(1, 11).select(F.col("id").alias("decile"))
     targets = deciles.crossJoin(F.broadcast(total)).select(
@@ -8394,7 +8300,7 @@ def q_temporal_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every scalar (cuts, total, leak count) is a 1-row broadcast; the tagging
     pass is narrow; the rollup is a 3-key partial agg."""
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    ranked = _dist_row_number(ev.select("ts"), ["ts"], "rn")
+    ranked = S.distributed_row_number(ev.select("ts"), ["ts"], "rn")
     n1 = ranked.groupBy().agg(F.max("rn").alias("n"))
     bounds = (
         ranked.crossJoin(F.broadcast(n1))
@@ -9034,7 +8940,7 @@ def q_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("cluster_rep").cast("long").alias("n_clusters")
     )
     toks = docs.select(T.token_count_ws(F.col("text")).cast("long").alias("n_tok"))
-    ranked = _dist_row_number(toks, ["n_tok"], "rn")
+    ranked = S.distributed_row_number(toks, ["n_tok"], "rn")
     ntot = ranked.groupBy().agg(F.max("rn").alias("n"))
     median = (
         ranked.crossJoin(F.broadcast(ntot))
@@ -9230,7 +9136,7 @@ def q_host_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("host")
         .agg(F.count(F.lit(1)).cast("long").alias("x"))
     )
-    ranked = _dist_row_number(counts, ["x", "host"], "i")
+    ranked = S.distributed_row_number(counts, ["x", "host"], "i")
     return ranked.agg(
         F.count(F.lit(1)).cast("long").alias("n_hosts"),
         F.sum("x").cast("long").alias("total_urls"),
@@ -12124,7 +12030,7 @@ def q_quality_decile_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator both engines define identically over a total order.
 
     Scale shape: the rank is one global-order window — at corpus scale
-    this becomes the two-pass distributed row_number (length_deciles'
+    this becomes scheduler.distributed_row_number (length_deciles'
     machinery); here the direct form keeps the oracle 1:1."""
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars", "text")
     scored = docs.select(

@@ -55,7 +55,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.local.dir", os.environ.get("SPARK_GRAFT_LOCAL_DIR", "/tmp"))
-        # saveAsTable target (bucketed layouts): keep it out of the repo; a
+        # catalog-table target: keep it out of the repo; a
         # real deployment points this at the shared warehouse/catalog.
         .config(
             "spark.sql.warehouse.dir",

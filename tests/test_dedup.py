@@ -121,3 +121,28 @@ def test_probe_mapside_plan_has_no_exchange(spark, tmp_path):
     shuffled = store.probe(cand, 1, mode="shuffle")
     shuffled.collect()
     assert "Exchange" in shuffled._jdf.queryExecution().executedPlan().toString()
+
+
+def test_probe_auto_mode_flips_at_mapside_max_bytes(spark, tmp_path):
+    """``auto`` probes map-side while the version's total shard bytes are
+    at most MAPSIDE_MAX_BYTES and shuffles by bucket one byte above it;
+    on either side its values equal the forced mode's."""
+    from facebook_page_scrapy_spark.operators import dedup as D
+    from pyspark.sql import functions as F
+
+    store = D.BloomStore(str(tmp_path / "bl3"), n_shards=4)
+    seen = spark.range(0, 500).select(
+        F.concat(F.lit("https://h/z"), F.col("id").cast("string")).alias("url_canon")
+    ).select("url_canon", D.bucket_of(F.col("url_canon"), 4).alias("bucket"))
+    store.build(seen, version=1)
+    cand = spark.range(250, 750).select(
+        F.concat(F.lit("https://h/z"), F.col("id").cast("string")).alias("url_canon")
+    )
+    total = store._total_shard_bytes(1)
+    for limit, forced, exchanged in ((total, "mapside", False), (total - 1, "shuffle", True)):
+        store.MAPSIDE_MAX_BYTES = limit
+        auto = store.probe(cand, 1)
+        got = auto.orderBy("url_canon").collect()
+        plan = auto._jdf.queryExecution().executedPlan().toString()
+        assert ("Exchange" in plan) is exchanged, (limit, plan)
+        assert got == store.probe(cand, 1, mode=forced).orderBy("url_canon").collect()

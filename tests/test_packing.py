@@ -1,4 +1,4 @@
-"""Sequence-packing tests: the distributed two-pass prefix sum must equal a
+"""Sequence-packing tests: the distributed prefix sum must equal a
 naive single-stream packing, including docs that span chunk boundaries."""
 
 from __future__ import annotations

@@ -264,23 +264,29 @@ RANK_HINTS = (None, 1)
 
 
 def test_distributed_rank_matches_global_window(spark):
+    """row_number over a total order, dense_rank over a key with ties and a
+    running sum over a unique key all equal the global window, as long."""
     from pyspark.sql import Window
 
     df = _big_frontier(spark)
-    want = df.withColumn(
-        "__rank", F.row_number().over(Window.orderBy(*S.dispatch_order()))
-    )
-    for n_rows_hint in RANK_HINTS:
-        got = S.distributed_row_number(
-            df, S.dispatch_order(), "__rank", n_rows_hint=n_rows_hint
-        )
-        diff = (
-            got.select("url_canon", "__rank")
-            .exceptAll(want.select("url_canon", "__rank"))
-            .count()
-        )
-        assert diff == 0, n_rows_hint
-        assert got.schema["__rank"].dataType.simpleString() == "int"
+    cases = [
+        (S.dispatch_order(), F.row_number),
+        ([F.col("priority").desc()], F.dense_rank),
+        ([F.col("enqueued_seq").asc()], lambda: F.sum("priority")),
+    ]
+    for order, rank_fn in cases:
+        want = df.withColumn("__rank", rank_fn().over(Window.orderBy(*order)))
+        for n_rows_hint in RANK_HINTS:
+            got = S.distributed_row_number(
+                df, order, "__rank", n_rows_hint=n_rows_hint, rank_fn=rank_fn
+            )
+            diff = (
+                got.select("url_canon", "__rank")
+                .exceptAll(want.select("url_canon", "__rank"))
+                .count()
+            )
+            assert diff == 0, (order, n_rows_hint)
+            assert got.schema["__rank"].dataType.simpleString() == "bigint"
 
 
 def test_round_dispatch_plan_has_no_partitionless_window(spark):
@@ -315,6 +321,18 @@ def test_discovery_rank_plan_has_no_partitionless_window(spark):
             F.count_distinct("__r").alias("d"),
         ).collect()[0]
         assert (agg.n, agg.lo, agg.hi, agg.d) == (4000, 1, 4000, 4000), n_rows_hint
+
+
+def test_catalog_ranks_have_no_partitionless_window(spark):
+    """The catalog entries that rank or prefix-sum globally do it through
+    distributed_row_number, so no partition-less WindowExec is left in
+    their plans."""
+    from facebook_page_scrapy_spark import queries as Q
+
+    for name in ("pack_sequences", "suffix_ranks", "length_deciles",
+                 "temporal_split", "dataset_card", "host_gini"):
+        fn = Q.QUERIES[name][0]
+        assert _partitionless_windows(fn(spark, "/root/testdata/sf0.001")) == [], name
 
 
 def test_seed_and_requeue_deltas_have_no_partitionless_window(spark, tmp_path, monkeypatch):

@@ -7,9 +7,11 @@ between this sandbox and a 1000-executor cluster, so any query whose
 VALUES depend on it (partition-order-sensitive aggregation, floating
 sum order, `spark_partition_id` leaking into output arithmetic) is a
 correctness bug at scale even if it passes the fixed-parallelism oracle
-gate. The suffix/prefix-sum family (`_dist_rank`, `_token_stream`,
-`pack_sequences`) deliberately uses `spark_partition_id` internally —
-these sweeps prove the internal pids never reach the output values.
+gate. `scheduler.distributed_row_number` (the distributed rank and prefix
+sum behind `suffix_ranks`, `pack_sequences`, `length_deciles` and the
+other order-statistic queries) deliberately uses `spark_partition_id`
+internally — these sweeps prove the internal pids never reach the output
+values.
 
 Usage: python tools/check_invariance.py [sf_dir] [query ...]
 """

@@ -112,7 +112,7 @@ PLAN_QUERIES = [
     # suffix_ranks / neardup_clusters_star are iterative: their eager
     # localCheckpoints run during plan construction and the printed plan is
     # the final round's (post-checkpoint) — the per-round shape is the
-    # _dist_dense_rank / star-contraction plan repeated.
+    # dense-rank distributed_row_number / star-contraction plan repeated.
     "suffix_ranks",
     "bpe_pair_counts",
     "asof_budget_join",

@@ -10,21 +10,24 @@
 #   make verify-quick  — oracle sweep at sf0.001 only (~5 min), for
 #                        iterating on a single operator
 #   make bench         — one bench.py JSON line at sf0.01
+#   make loc           — the package's Python line count (the size metric)
 #
-# Every target exits non-zero on the first failing level. Runtimes on a
-# quiet local[32] host: pytest ~13 min, oracle sweep ~12 min, invariance
-# ~20 min.
+# Every target exits non-zero on the first failing level. `make test` runs
+# the whole suite (no -x) and fails if any test failed; `make -k verify`
+# runs the later levels past a failing one. Runtimes on a quiet local[32]
+# host: pytest ~13 min, oracle sweep ~12 min, invariance ~20 min.
 
 PY ?= python
 SF_ORACLES ?= /root/testdata/sf0.01
 SF_QUICK ?= /root/testdata/sf0.001
 
-.PHONY: verify verify-quick test oracles invariance bench
+.PHONY: verify verify-quick test oracles invariance bench loc
 
 verify: test oracles invariance
 
 test:
-	$(PY) -m pytest tests/ -x -q
+	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
+	  $(PY) -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 oracles:
 	$(PY) tools/check_oracles.py $(SF_ORACLES)
@@ -37,3 +40,6 @@ verify-quick:
 
 bench:
 	SPARK_GRAFT_SF_DIR=$(SF_ORACLES) $(PY) bench.py
+
+loc:
+	@find facebook_page_scrapy_spark -name '*.py' | xargs cat | wc -l

@@ -198,7 +198,7 @@ def bench_crawl(spark, n_groups: int = 32, pages: int = 3, posts: int = 200) -> 
         with tempfile.TemporaryDirectory() as tmp:
             eng = CrawlEngine(
                 spark, tmp, CorpusFetcher(corpus),
-                default_tokens=100_000, use_bloom=True, n_bloom_shards=8,
+                default_tokens=100_000, n_bloom_shards=8,
                 hot_host_threshold=1000, store_raw=False,
             )
             t0 = time.time()

@@ -14,7 +14,9 @@ outstanding request, pickle checkpoint per fetch) with batch rounds:
 - parse = ONE fused mapInPandas pass (operators.parse.parse_all) emitting a
   tagged union of link/post/comment/reaction rows — each HTML parsed once;
 - URL-seen dedup = partitioned Bloom shards gating an exact anti-join
-  (operators.dedup), versions recorded in per-partition lineage;
+  (operators.dedup) — the loop's one dedup path: seeding builds the filter,
+  every round probes it and adds its enqueued URLs; versions are recorded in
+  per-partition lineage;
 - every round commits one atomic snapshot (state.snapshot.SnapshotStore,
   parallel delta writes) carrying per-bucket lineage rows (frontier offset,
   bloom shard version, fetch/dedup/parse counters) — the resume point.
@@ -48,7 +50,7 @@ released), so the next call retries it.
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
@@ -65,6 +67,8 @@ from pyspark.sql import types as ST
 ROUND_BASE = 2**32
 # parse fan-out: one Python task per this many pages of pending frontier
 PAGES_PER_PARSE_TASK = 2048
+# comment pagination step: the reference chains ?p+=10 (Facebook_group_cmt.py:176-178)
+COMMENT_PAGE_STEP = 10
 # copy, don't .add(): StructType.add mutates the receiver in place and would
 # corrupt the shared schemas.FRONTIER for every other importer
 FRONTIER_EVENT_SCHEMA = ST.StructType(
@@ -99,7 +103,6 @@ class RoundStats:
     parsed_posts: int = 0
     parsed_comments: int = 0
     snapshot_id: int = 0
-    extras: dict = field(default_factory=dict)
 
 
 class CrawlEngine:
@@ -114,11 +117,9 @@ class CrawlEngine:
         default_tokens: int = 1,
         global_budget: int | None = None,
         four_level: bool = False,
-        use_bloom: bool = True,
         n_bloom_shards: int = 8,
         hot_host_threshold: int | None = None,
         compact_every: int = 8,
-        comment_page_step: int = 10,
         store_raw: bool = True,
         identity_seed: int | None = None,
     ):
@@ -147,11 +148,9 @@ class CrawlEngine:
         self.default_tokens = default_tokens
         self.global_budget = global_budget
         self.four_level = four_level
-        self.use_bloom = use_bloom
         self.n_bloom_shards = n_bloom_shards
         self.hot_host_threshold = hot_host_threshold
         self.compact_every = compact_every
-        self.comment_page_step = comment_page_step
         self.store_raw = store_raw
         meta = self.store.manifest().get("meta", {})
         self.round = meta.get("round", 0)
@@ -233,12 +232,11 @@ class CrawlEngine:
         seen = seeds.select(
             "url_canon", D.bucket_of(F.col("url_canon"), self.n_bloom_shards).alias("bucket")
         )
-        if self.use_bloom:
-            if self.bloom_version == 0:
-                self.bloom.build(seen, version=1)
-                self.bloom_version = 1
-            else:
-                self.bloom_version = self.bloom.add(seen, self.bloom_version)
+        if self.bloom_version == 0:
+            self.bloom.build(seen, version=1)
+            self.bloom_version = 1
+        else:
+            self.bloom_version = self.bloom.add(seen, self.bloom_version)
         self.round += 1
         if self._pending_est is not None:
             self._pending_est += len(rows)
@@ -395,7 +393,7 @@ class CrawlEngine:
                 cmeta.filter(F.col("n_comments") > 0)
                 .select(
                     F.regexp_replace(F.col("url"), r"([?&])p=\d+", "$1p=__X__").alias("__tmpl"),
-                    (U.comment_offset_of(F.col("url")) + self.comment_page_step).alias("__next_p"),
+                    (U.comment_offset_of(F.col("url")) + COMMENT_PAGE_STEP).alias("__next_p"),
                     "group_id",
                     "src_rank",
                 )
@@ -445,14 +443,11 @@ class CrawlEngine:
         if stats.dispatched == 0:
             return stats
 
-        # cross-round dedup (bloom-gated or exact)
-        seen = self.seen_df()
-        if self.use_bloom and self.bloom_version > 0:
-            fresh = D.dedup_bloom_gated(
-                cand, seen, self.bloom, self.bloom_version, cleanup=cache
-            )
-        else:
-            fresh = D.dedup_exact(cand, seen)
+        # cross-round dedup: seeding builds the filter before any round can
+        # dispatch, and a round with nothing dispatched returned above
+        fresh = D.dedup_bloom_gated(
+            cand, self.seen_df(), self.bloom, self.bloom_version, cleanup=cache
+        )
 
         base = (self.round + 1) * ROUND_BASE
         # discovery-order sequence numbers via the same two-pass distributed
@@ -507,16 +502,6 @@ class CrawlEngine:
         ).observe(obs_new, F.count(F.lit(1)).alias("n"))
         self.round += 1
 
-        def _filter_update() -> None:
-            if self.use_bloom:
-                if self.bloom_version == 0:
-                    self.bloom.build(new_seen, version=1)
-                    self.bloom_version = 1
-                else:
-                    self.bloom_version = self.bloom.add(new_seen, self.bloom_version)
-            else:
-                new_rows.count()  # no shard job to ride on → materialize directly
-
         deltas = {
             "frontier": frontier_delta,
             "seen": new_seen,
@@ -564,9 +549,9 @@ class CrawlEngine:
 
         sid = self.store.manifest()["snapshot_id"] + 1
         with ThreadPoolExecutor(max_workers=2) as ex:
-            fut = ex.submit(_filter_update)
+            fut = ex.submit(self.bloom.add, new_seen, self.bloom_version)
             staged = self.store.stage(sid, deltas)  # parallel writes
-            fut.result()
+            self.bloom_version = fut.result()
         stats.enqueued = int(obs_new.get["n"] or 0)
         stats.deduped = n_cand - stats.enqueued
 
@@ -600,7 +585,7 @@ class CrawlEngine:
                 0, self._pending_est - stats.fetched - stats.exhausted + stats.enqueued
             )
         stats.snapshot_id = self.store.publish(
-            sid, staged, meta=self._meta("round", stats=stats.__dict__ | {"extras": {}})
+            sid, staged, meta=self._meta("round", stats=stats.__dict__)
         )
         return stats
 
@@ -782,9 +767,8 @@ class CrawlEngine:
         # materialize; recounts pending as it does
         self._pending_est = new_frontier.filter(F.col("state") == "pending").count()
         self.round += 1
-        if self.use_bloom:
-            self.bloom_version += 1
-            self.bloom.build(new_seen, version=self.bloom_version)
+        self.bloom_version += 1
+        self.bloom.build(new_seen, version=self.bloom_version)
         self.store.commit(
             {"frontier": new_frontier, "seen": new_seen},
             meta=self._meta("forget"),

@@ -4,11 +4,10 @@ The reference dedups three ways: Scrapy's request-fingerprint dupefilter
 (``Crawl_Data_FaceBook/settings.py:37``), a Mongo ``post_exist`` probe before
 enqueueing (``spiders/Facebook_group_post.py:143``, ``DatabaseUtils/DBUtils.py:30-35``)
 and a ``cmt_exist`` probe before insert (``pipelines.py:54``). All are one
-network round-trip per row. Here the same semantics are a set problem:
+network round-trip per row. Here the same semantics are a set problem, and
+the crawl loop has one path for it:
 
-- **exact**: ``candidates LEFT ANTI JOIN seen ON url_canon`` — correct at any
-  scale but shuffles both sides.
-- **bloom-gated** (the 10^10-URL path): a *partitioned* Bloom filter — one
+- **bloom-gated** (``dedup_bloom_gated``): a *partitioned* Bloom filter — one
   shard per ``pmod(xxhash64(url_canon), n_shards)`` bucket, persisted as
   versioned files. Probe is a grouped Arrow UDF that loads only its own shard
   (executor-side file read, worker-local cache), so no giant broadcast and no
@@ -16,6 +15,9 @@ network round-trip per row. Here the same semantics are a set problem:
   negatives); only the positives (~fpr of the new mass) go through the exact
   anti-join. At steady state this turns an O(|frontier|+|seen|) shuffle into
   an O(|frontier|) map plus a tiny join.
+- **exact** (``dedup_exact``): ``candidates LEFT ANTI JOIN seen ON
+  url_canon`` — the gate's confirm step for its positives. Correct at any
+  scale but shuffles both sides.
 
 Bloom shards cannot delete: retracting a URL (``CrawlEngine.forget_urls``)
 rebuilds every shard from the remaining seen set at a new version.
@@ -29,7 +31,6 @@ from __future__ import annotations
 import math
 import os
 import shutil
-from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -91,15 +92,6 @@ def _bloom_params(n: int, fpr: float) -> tuple[int, int]:
     return m, min(k, 16)
 
 
-@dataclass
-class BloomShardMeta:
-    bucket: int
-    version: int
-    m: int
-    k: int
-    n_inserted: int
-
-
 class BloomStore:
     """Versioned, partitioned Bloom shards on a shared filesystem.
 
@@ -126,7 +118,7 @@ class BloomStore:
         return max(vs, default=0)
 
     # -- build / add ---------------------------------------------------------
-    def build(self, seen: DataFrame, version: int = 1, expected_per_shard: int | None = None) -> int:
+    def build(self, seen: DataFrame, version: int = 1) -> int:
         """Build all shards from the full seen set (url_canon column)."""
         n_shards, fpr, path = self.n_shards, self.fpr, self.path
         shard_file = self._shard_file
@@ -139,7 +131,7 @@ class BloomStore:
 
         def build_shard(pdf: pd.DataFrame) -> pd.DataFrame:
             bucket = int(pdf["bucket"].iloc[0])
-            n = expected_per_shard or max(len(pdf) * 2, 1024)
+            n = max(len(pdf) * 2, 1024)
             m, k = _bloom_params(n, fpr)
             bits = np.zeros(m // 64, dtype=np.uint64)
             h1 = pdf["__h1"].to_numpy(dtype=np.int64)
@@ -324,6 +316,5 @@ def dedup_bloom_gated(
         cleanup.append(flagged)
     fresh = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
     suspects = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-    confirmed_new = suspects.join(seen.select(key).distinct(), on=key, how="left_anti")
-    return fresh.unionByName(confirmed_new)
+    return fresh.unionByName(dedup_exact(suspects, seen, key))
 

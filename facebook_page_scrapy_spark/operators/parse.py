@@ -420,55 +420,10 @@ def posts_from_html(iterator: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         )
 
 
-LINKS_OUT_SCHEMA = "src_url string, group_id string, href string, link_kind string, link_idx int"
-
-
-def links_from_html(iterator: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas fn: (url, group_id, html) → discovered link rows (UDTF
-    shape: one page → N links). link_idx preserves DOM order for FIFO parity."""
-    for pdf in iterator:
-        rows = []
-        for url, gid, html in zip(pdf["url"], pdf["group_id"], pdf["html"]):
-            found = extract_page_links(html)
-            idx = 0
-            for _post_id, href in found["post_links"]:
-                rows.append((url, gid, href, "post", idx))
-                idx += 1
-            if found["next_page"]:
-                rows.append((url, gid, found["next_page"], "page", idx))
-        yield pd.DataFrame(
-            rows, columns=["src_url", "group_id", "href", "link_kind", "link_idx"]
-        )
-
-
-def links_from_html_ranked(iterator: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """As links_from_html but carries the dispatch rank of the source page so
-    discovery order (src_rank, link_idx) is globally deterministic."""
-    for pdf in iterator:
-        rows = []
-        for url, gid, html, rank in zip(pdf["url"], pdf["group_id"], pdf["html"], pdf["__rank"]):
-            found = extract_page_links(html)
-            idx = 0
-            for _post_id, href in found["post_links"]:
-                rows.append((url, gid, href, "post", idx, int(rank)))
-                idx += 1
-            if found["next_page"]:
-                rows.append((url, gid, found["next_page"], "page", idx, int(rank)))
-        yield pd.DataFrame(
-            rows,
-            columns=["src_url", "group_id", "href", "link_kind", "link_idx", "src_rank"],
-        )
-
-
-CMT_OUT_SCHEMA = (
-    "doc_id string, comment_id string, text string, username string, "
-    "user_id string, comment_url string"
-)
-
 # ---------------------------------------------------------------------------
 # Fused single-pass extraction: one Python worker pass over the round's HTML
 # emits a tagged union of link / post / comment / reaction / comment-page-meta
-# rows. One mapInPandas job instead of three — the parse stage is the round's
+# rows. One mapInPandas job for every row kind — the parse stage is the round's
 # only Python hop, so collapsing it dominates per-round latency at small
 # batches and per-doc cost at scale (each HTML string is parsed exactly once).
 # ---------------------------------------------------------------------------
@@ -654,16 +609,3 @@ def parse_all(iterator: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                                  reactions=rx))
         yield pd.DataFrame(rows, columns=_PARSE_ALL_COLS)
 
-
-def comments_from_html(iterator: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in iterator:
-        rows = []
-        for doc_id, html in zip(pdf["doc_id"], pdf["html"]):
-            for c in extract_comments(html):
-                rows.append(
-                    (doc_id, c["comment_id"], c["text"], c["username"], c["user_id"], c["comment_url"])
-                )
-        yield pd.DataFrame(
-            rows,
-            columns=["doc_id", "comment_id", "text", "username", "user_id", "comment_url"],
-        )

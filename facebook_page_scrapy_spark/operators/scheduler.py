@@ -30,6 +30,8 @@ from pyspark.sql import functions as F
 ROWS_PER_TASK = 65536
 # fetch attempts per URL before it is marked failed (RETRY_TIMES, settings.py:45)
 MAX_RETRIES = 200
+# sub-windows a hot host's dispatch window is salted into (per_host_dispatch)
+N_SALTS = 8
 
 
 def dispatch_order():
@@ -167,7 +169,6 @@ def per_host_dispatch(
     host_budget: DataFrame | None = None,
     default_tokens: int = 1,
     hot_host_threshold: int | None = None,
-    n_salts: int = 8,
 ) -> DataFrame:
     """Select this round's dispatch batch: top-``tokens`` rows per host by
     (priority desc, enqueued_seq asc).
@@ -178,8 +179,8 @@ def per_host_dispatch(
     (the ``120/n_cookies`` analog, utils.py:25).
 
     Skew: when ``hot_host_threshold`` is set, hosts with more pending rows
-    than the threshold are ranked inside ``n_salts`` sub-windows (salt =
-    hash(url) % n_salts) and each sub-window gets tokens/n_salts (min 1).
+    than the threshold are ranked inside ``N_SALTS`` sub-windows (salt =
+    hash(url) % N_SALTS) and each sub-window gets tokens/N_SALTS (min 1).
     This bounds the single-partition sort a 90%-one-host frontier would
     otherwise pay, at the cost of approximate (not global-FIFO) order within
     the hot host — acceptable: politeness only requires the *count* per host.
@@ -208,30 +209,28 @@ def per_host_dispatch(
     df = df.withColumn("__hot", F.col("__host_n").isNotNull()).drop("__host_n")
     df = df.withColumn(
         "__salt",
-        F.when(F.col("__hot"), F.pmod(F.xxhash64("url_canon"), F.lit(n_salts))).otherwise(F.lit(0)),
+        F.when(F.col("__hot"), F.pmod(F.xxhash64("url_canon"), F.lit(N_SALTS))).otherwise(F.lit(0)),
     )
     w = Window.partitionBy("host", "__salt").orderBy(*dispatch_order())
     df = df.withColumn("__rn", F.row_number().over(w))
     per_salt = F.when(
-        F.col("__hot"), F.greatest(F.floor(F.col("__tokens") / n_salts), F.lit(1))
+        F.col("__hot"), F.greatest(F.floor(F.col("__tokens") / N_SALTS), F.lit(1))
     ).otherwise(F.col("__tokens"))
     picked = df.filter(F.col("__rn") <= per_salt)
     return picked.drop("__rn", "__tokens", "__hot", "__salt")
 
 
-def rank_weighted_dispatch(
-    frontier: DataFrame,
-    host_rank: DataFrame,
-    total_budget: int,
-    min_tokens: int = 1,
-    **dispatch_kwargs,
+def rank_weighted_budget(
+    host_rank: DataFrame, total_budget: int, min_tokens: int = 1
 ) -> DataFrame:
-    """Dispatch under a GLOBAL fetch budget split across hosts proportionally
-    to an importance score — the engine-side consumer of the PageRank /
-    budget-allocation signal (catalog queries host_pagerank /
-    crawl_budget_allocation). Replaces the reference's flat
-    one-request-per-host policy (settings.py:28 DOWNLOAD_DELAY) when a rank
-    table exists; unknown hosts get ``min_tokens`` so discovery never starves.
+    """``host_budget(host, tokens_per_round)``: a GLOBAL fetch budget split
+    across hosts proportionally to an importance score (the PageRank /
+    budget-allocation signal of catalog queries host_pagerank /
+    crawl_budget_allocation). Pass it as ``per_host_dispatch(host_budget=)``
+    or ``CrawlEngine(host_budget=)`` with ``default_tokens=min_tokens`` in
+    place of the reference's flat one-request-per-host policy (settings.py:28
+    DOWNLOAD_DELAY); unranked hosts then get ``min_tokens`` so discovery
+    never starves.
 
     The budget is a HARD cap over ranked hosts: every ranked host is first
     reserved ``min_tokens`` (discovery never starves), and the surplus
@@ -245,9 +244,7 @@ def rank_weighted_dispatch(
 
     ``host_rank(host, rank)`` is one row per host → broadcast; the budget math
     is one scalar agg + windows over the dim-sized rank table (single
-    partition is fine at dim cardinality), then dispatch is the standard
-    per-host top-k window (all of per_host_dispatch's skew handling applies
-    via ``dispatch_kwargs``)."""
+    partition is fine at dim cardinality)."""
     stats = host_rank.agg(
         F.round(F.sum("rank"), 9).alias("__total_rank"),
         F.count(F.lit(1)).alias("__n_hosts"),
@@ -283,52 +280,49 @@ def rank_weighted_dispatch(
         F.row_number().over(w_rank) <= F.lit(int(total_budget) // max(min_tokens, 1)),
         F.lit(min_tokens),
     ).otherwise(0)
-    budget = ranked.select(
+    return ranked.select(
         "host",
         F.when(F.col("__surplus") > 0, abundant)
         .otherwise(scarce)
         .cast("int")
         .alias("tokens_per_round"),
     )
-    return per_host_dispatch(
-        frontier, host_budget=budget, default_tokens=min_tokens, **dispatch_kwargs
-    )
 
 
 def assign_identities(
     dispatch: DataFrame,
     identities: DataFrame,
-    n_alive: int | None = None,
+    n_alive: int,
     start_slot: int = 0,
 ) -> DataFrame:
     """Round-robin identity slots per host (utils.py:32-37), skipping blocked
     identities (exclusion list, ``Facebook_group_reaction.py:32-34``).
 
-    ``n_alive`` lets the caller pass the (tiny, static) pool size once instead
-    of paying a driver-side ``count()`` action every round in the hot loop.
+    ``n_alive`` is the count of non-blocked identities: the caller counts the
+    (tiny, static) pool once, not with a driver-side ``count()`` every round.
     ``start_slot`` reproduces F14 (utils.py:30: the reference seeds the cookie
     index with a random int; we take the caller's *seeded* start so ordering
     parity is reproducible — see CrawlEngine(identity_seed=...))."""
     alive = identities.filter(~F.col("blocked")).select("identity_id")
-    n = alive.count() if n_alive is None else n_alive
-    if n == 0:
+    if n_alive == 0:
         return dispatch.withColumn("identity_id", F.lit(None).cast("string"))
     ranked = alive.withColumn(
         "__slot", F.row_number().over(Window.orderBy("identity_id")) - 1
     )
     w = Window.partitionBy("host").orderBy(*dispatch_order())
     slotted = dispatch.withColumn(
-        "__slot", (F.row_number().over(w) - 1 + start_slot) % n
+        "__slot", (F.row_number().over(w) - 1 + start_slot) % n_alive
     )
     return slotted.join(F.broadcast(ranked), "__slot", "left").drop("__slot")
 
 
-def retry_requeue(failed: DataFrame, max_retries: int = MAX_RETRIES) -> DataFrame:
+def retry_requeue(failed: DataFrame) -> DataFrame:
     """Failed fetches rejoin the frontier with attempts+1 until the retry
-    budget (RETRY_TIMES=200, settings.py:45) is exhausted; the bumped
-    enqueued_seq acts as backoff (they sort after fresh peers)."""
+    budget (``MAX_RETRIES``: RETRY_TIMES=200, settings.py:45) is exhausted.
+    There is no backoff: a retried URL keeps its ``enqueued_seq``, so it
+    re-dispatches ahead of every newer peer of its priority."""
     return (
-        failed.filter(F.col("attempts") + 1 < max_retries)
+        failed.filter(F.col("attempts") + 1 < MAX_RETRIES)
         .withColumn("attempts", F.col("attempts") + 1)
         .withColumn("state", F.lit("pending"))
     )

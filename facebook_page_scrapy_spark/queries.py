@@ -3764,7 +3764,7 @@ def q_crawl_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     site = datagen.make_site(n_groups=2, pages_per_group=2, posts_per_page=2, seed=42)
     _, corpus = datagen.site_to_dataframes(spark, site)
     with tempfile.TemporaryDirectory() as tmp:
-        eng = CrawlEngine(spark, tmp, CorpusFetcher(corpus), default_tokens=100, use_bloom=True,
+        eng = CrawlEngine(spark, tmp, CorpusFetcher(corpus), default_tokens=100,
                           n_bloom_shards=4)
         eng.seed(site.seeds)
         eng.run(max_rounds=12)
@@ -8464,10 +8464,11 @@ _BF_PROBES = 5000
 def q_bloom_fpr_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """URL-seen bloom filter, measured — the catalog surface for the
     engine's T5 dedup structure (operators/dedup.py keeps the stateful
-    shards; this query rebuilds the same md5-position construction
-    declaratively and MEASURES its false-positive rate on {_BF_PROBES}
-    held-out probe URLs, the number a capacity planner actually checks
-    against the (1−e^(−kn/m))^k design point). load_e6 = k·n·1e6 div m is
+    shards at xxhash64 double-hashing positions; this query builds a filter
+    declaratively at md5(url‖i) positions instead and MEASURES its
+    false-positive rate on {_BF_PROBES} held-out probe URLs, the number a
+    capacity planner actually checks against the (1−e^(−kn/m))^k design
+    point). load_e6 = k·n·1e6 div m is
     the integer-exact occupancy readout.
 
     Plan: the bit set is distinct(md5(url‖i) mod m) — 4× narrow fan-out of

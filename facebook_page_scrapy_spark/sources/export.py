@@ -21,6 +21,3 @@ def export_json_by_group(df: DataFrame, path: str, group_col: str = "page_id") -
         .json(path)
     )
 
-
-def read_json_export(spark, path: str) -> DataFrame:
-    return spark.read.json(path)

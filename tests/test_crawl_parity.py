@@ -34,7 +34,7 @@ def test_two_level_parity(spark, tmp_path):
     site = datagen.make_site(n_groups=2, pages_per_group=2, posts_per_page=1, seed=7)
     sim = simulate(site)
 
-    eng = build_engine(spark, site, tmp_path, default_tokens=1, use_bloom=True, n_bloom_shards=4)
+    eng = build_engine(spark, site, tmp_path, default_tokens=1, n_bloom_shards=4)
     eng.seed(site.seeds)
     eng.run(max_rounds=60)
 
@@ -53,7 +53,7 @@ def test_four_level_parity(spark, tmp_path):
     assert any(u for u in sim.fetch_order if "/ufi/reaction" in u)
 
     eng = build_engine(
-        spark, site, tmp_path, default_tokens=1, four_level=True, use_bloom=True,
+        spark, site, tmp_path, default_tokens=1, four_level=True,
         n_bloom_shards=4,
     )
     eng.seed(site.seeds)
@@ -69,7 +69,7 @@ def test_parallel_budget_same_seen_set(spark, tmp_path):
     site = datagen.make_site(n_groups=3, pages_per_group=2, posts_per_page=3, seed=13)
     sim = simulate(site)
 
-    eng = build_engine(spark, site, tmp_path, default_tokens=500, use_bloom=True)
+    eng = build_engine(spark, site, tmp_path, default_tokens=500)
     eng.seed(site.seeds)
     stats = eng.run(max_rounds=20)
 

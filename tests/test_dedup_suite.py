@@ -256,7 +256,7 @@ def test_stream_frontier_deltas_tail(spark, tmp_path):
     _, corpus = datagen.site_to_dataframes(spark, site)
     ckpt = str(tmp_path / "c")
     eng = CrawlEngine(spark, ckpt, CorpusFetcher(corpus), default_tokens=100,
-                      use_bloom=False, compact_every=1000)
+                      compact_every=1000)
     eng.seed(site.seeds)
     eng.run(max_rounds=10)
 

@@ -18,7 +18,7 @@ from facebook_page_scrapy_spark.operators.fetch import CorpusFetcher
 def crawl_site(spark, site, tmp, **kw):
     _, corpus = datagen.site_to_dataframes(spark, site)
     eng = CrawlEngine(spark, str(tmp), CorpusFetcher(corpus),
-                      default_tokens=500, use_bloom=True, n_bloom_shards=4, **kw)
+                      default_tokens=500, n_bloom_shards=4, **kw)
     eng.seed(site.seeds)
     eng.run(max_rounds=30)
     return eng
@@ -192,7 +192,7 @@ def test_recrawl_comments_resumes_interrupted_chain_at_offset(spark, tmp_path):
     )
     _, corpus = datagen.site_to_dataframes(spark, site)
     eng = CrawlEngine(spark, str(tmp_path / "c"), CorpusFetcher(corpus),
-                      default_tokens=500, use_bloom=True, n_bloom_shards=4,
+                      default_tokens=500, n_bloom_shards=4,
                       four_level=True)
     eng.seed(site.seeds)
     # rounds: 1 page → 2 posts → 3 reaction+?p=0 → (stop; ?p=10.. unfetched)

@@ -41,9 +41,7 @@ def test_hot_host_salting_budget_respected(spark):
     rows = [(f"hot{i}", "hot.example", "page", 1, i) for i in range(200)]
     rows += [(f"cold{i}", "cold.example", "page", 1, i) for i in range(3)]
     df = frontier_rows(spark, rows)
-    picked = S.per_host_dispatch(
-        df, default_tokens=16, hot_host_threshold=50, n_salts=8
-    )
+    picked = S.per_host_dispatch(df, default_tokens=16, hot_host_threshold=50)
     counts = {r.host: r["count"] for r in picked.groupBy("host").count().collect()}
     assert counts["cold.example"] == 3
     # hot host: 8 salts × (16//8)=2 → ≤16, ≥8
@@ -73,7 +71,7 @@ def test_identity_round_robin(spark):
     ids = spark.createDataFrame(
         [("alice", False), ("bob", False), ("chanvo", True)], schemas.IDENTITIES
     )
-    got = S.assign_identities(df, ids).orderBy("enqueued_seq").collect()
+    got = S.assign_identities(df, ids, n_alive=2).orderBy("enqueued_seq").collect()
     assert [r.identity_id for r in got] == ["alice", "bob"] * 3  # blocked excluded
 
 
@@ -105,9 +103,19 @@ def test_identity_seeded_start_slot(spark):
 def test_retry_requeue_cap(spark):
     df = frontier_rows(spark, [("u1", "h", "page", 1, 1), ("u2", "h", "page", 1, 2)])
     df = df.withColumn("attempts", F.when(F.col("url") == "u2", 199).otherwise(0))
-    kept = S.retry_requeue(df, max_retries=200).collect()
+    kept = S.retry_requeue(df).collect()
     assert [r.url for r in kept] == ["u1"]
     assert kept[0].attempts == 1 and kept[0].state == "pending"
+
+    # no backoff: the retried URL keeps its enqueued_seq, so it re-dispatches
+    # ahead of a newer pending peer of its priority on the same host
+    failed = frontier_rows(spark, [("old", "h", "page", 1, 1)]).withColumn(
+        "state", F.lit("failed")
+    )
+    peer = frontier_rows(spark, [("new", "h", "page", 1, 2)])
+    requeued = S.retry_requeue(failed).select(*peer.columns)
+    picked = S.per_host_dispatch(requeued.unionByName(peer), default_tokens=1).collect()
+    assert [(r.url, r.enqueued_seq, r.attempts) for r in picked] == [("old", 1, 1)]
 
 
 def test_identities_reach_fetcher(spark, tmp_path):
@@ -132,7 +140,7 @@ def test_identities_reach_fetcher(spark, tmp_path):
         "identity_id string, blocked boolean",
     )
     eng = CrawlEngine(spark, str(tmp_path / "c"), Spy(corpus),
-                      identities=ids, default_tokens=10, use_bloom=False)
+                      identities=ids, default_tokens=10)
     eng.seed(site.seeds)
     eng.run(max_rounds=5)
     assert seen_cols and all("identity_id" in c for c in seen_cols)
@@ -141,7 +149,10 @@ def test_identities_reach_fetcher(spark, tmp_path):
 def test_rank_weighted_dispatch_proportional(spark):
     from pyspark.sql import functions as F
 
-    from facebook_page_scrapy_spark.operators.scheduler import rank_weighted_dispatch
+    from facebook_page_scrapy_spark.operators.scheduler import (
+        per_host_dispatch,
+        rank_weighted_budget,
+    )
 
     # 3 hosts, 100 pending rows each; ranks 6/3/1 over a budget of 10
     rows = [
@@ -156,7 +167,9 @@ def test_rank_weighted_dispatch_proportional(spark):
         [("h0.example.com", 6.0), ("h1.example.com", 3.0), ("h2.example.com", 1.0)],
         "host string, rank double",
     )
-    got = rank_weighted_dispatch(frontier, ranks, total_budget=10).collect()
+    got = per_host_dispatch(
+        frontier, host_budget=rank_weighted_budget(ranks, total_budget=10)
+    ).collect()
     per_host = {}
     for r in got:
         per_host.setdefault(r.host, []).append(r.enqueued_seq)
@@ -177,7 +190,10 @@ def test_rank_weighted_dispatch_budget_is_hard_cap(spark):
     """One dominant host + many tiny-rank hosts must NOT blow past the global
     budget via the min_tokens floor (the round-1 bug: floors were additive on
     top of proportional shares, doubling the dispatch)."""
-    from facebook_page_scrapy_spark.operators.scheduler import rank_weighted_dispatch
+    from facebook_page_scrapy_spark.operators.scheduler import (
+        per_host_dispatch,
+        rank_weighted_budget,
+    )
 
     n_tiny = 40
     rows = [("big.com", "post", 2, i, f"/b/{i}") for i in range(100)] + [
@@ -192,7 +208,9 @@ def test_rank_weighted_dispatch_budget_is_hard_cap(spark):
         [("big.com", 0.999)] + [(f"t{h}.com", 1e-7) for h in range(n_tiny)],
         "host string, rank double",
     )
-    got = rank_weighted_dispatch(frontier, ranks, total_budget=50).collect()
+    got = per_host_dispatch(
+        frontier, host_budget=rank_weighted_budget(ranks, total_budget=50)
+    ).collect()
     per_host = {}
     for r in got:
         per_host[r.host] = per_host.get(r.host, 0) + 1
@@ -204,7 +222,9 @@ def test_rank_weighted_dispatch_budget_is_hard_cap(spark):
     assert per_host["big.com"] == 50 - n_tiny
 
     # scarcity mode: budget below the reserve -> top hosts by rank only
-    scarce = rank_weighted_dispatch(frontier, ranks, total_budget=5).collect()
+    scarce = per_host_dispatch(
+        frontier, host_budget=rank_weighted_budget(ranks, total_budget=5)
+    ).collect()
     sc = {}
     for r in scarce:
         sc[r.host] = sc.get(r.host, 0) + 1
@@ -212,7 +232,10 @@ def test_rank_weighted_dispatch_budget_is_hard_cap(spark):
 
 
 def test_rank_weighted_dispatch_unknown_host_floor(spark):
-    from facebook_page_scrapy_spark.operators.scheduler import rank_weighted_dispatch
+    from facebook_page_scrapy_spark.operators.scheduler import (
+        per_host_dispatch,
+        rank_weighted_budget,
+    )
 
     frontier = spark.createDataFrame(
         [("known.com", "post", 2, 1, "/a"), ("new.com", "post", 2, 2, "/b"),
@@ -220,7 +243,9 @@ def test_rank_weighted_dispatch_unknown_host_floor(spark):
         "host string, kind string, priority long, enqueued_seq long, path string",
     )
     ranks = spark.createDataFrame([("known.com", 1.0)], "host string, rank double")
-    got = rank_weighted_dispatch(frontier, ranks, total_budget=5)
+    got = per_host_dispatch(
+        frontier, host_budget=rank_weighted_budget(ranks, total_budget=5)
+    )
     per_host = {r.host: r.enqueued_seq for r in got.collect()}
     # the unranked host still gets min_tokens=1 (discovery never starves)
     assert per_host == {"known.com": 1, "new.com": 2}

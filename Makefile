@@ -10,7 +10,8 @@
 #   make verify-quick  — oracle sweep at sf0.001 only (~5 min), for
 #                        iterating on a single operator
 #   make bench         — one bench.py JSON line at sf0.01
-#   make loc           — the package's Python line count (the size metric)
+#   make loc           — the package's Python line count (the size metric),
+#                        then the engine's (the package minus queries.py)
 #
 # Every target exits non-zero on the first failing level. `make test` runs
 # the whole suite (no -x) and fails if any test failed; `make -k verify`
@@ -43,3 +44,4 @@ bench:
 
 loc:
 	@find facebook_page_scrapy_spark -name '*.py' | xargs cat | wc -l
+	@echo "engine (package minus queries.py): $$(find facebook_page_scrapy_spark -name '*.py' ! -name queries.py | xargs cat | wc -l)"

@@ -21,6 +21,14 @@ outstanding request, pickle checkpoint per fetch) with batch rounds:
   parallel delta writes) carrying per-bucket lineage rows (frontier offset,
   bloom shard version, fetch/dedup/parse counters) — the resume point.
 
+Commit path: every commit follows the table-format protocol (Iceberg spec,
+"Commit protocol"): stage immutable data files, then swap the manifest.
+``SnapshotStore.stage`` always writes fresh dirs, so a delta may read the
+table it replaces and nothing is materialized first. Commits outside the
+round go through ``CrawlEngine._commit``, which recounts the pending
+estimate on a frontier rewrite's own write job; the round stages and
+publishes itself so that its bloom shard update overlaps staging.
+
 Determinism: enqueued_seq = (round+1)·2³² + rank, where rank orders
 (dispatch-rank of the discovering page, DOM link index). With budget=1 this
 reproduces the reference's FIFO queue order exactly (parity tests); with
@@ -69,6 +77,8 @@ ROUND_BASE = 2**32
 PAGES_PER_PARSE_TASK = 2048
 # comment pagination step: the reference chains ?p+=10 (Facebook_group_cmt.py:176-178)
 COMMENT_PAGE_STEP = 10
+# the pending kinds a queue reset drops (Facebook_group_reaction.py:91-93)
+TRANSIENT_KINDS = ("reaction", "comment")
 # copy, don't .add(): StructType.add mutates the receiver in place and would
 # corrupt the shared schemas.FRONTIER for every other importer
 FRONTIER_EVENT_SCHEMA = ST.StructType(
@@ -157,20 +167,19 @@ class CrawlEngine:
         self.bloom_version = meta.get("bloom_version", 0)
         # running count of pending frontier rows: seeded at seed(), advanced
         # from each round's observed counters (pending - fetched - exhausted
-        # + enqueued), recounted exactly where a commit materializes the
-        # frontier anyway (compaction, queue reset, forget). It sizes the
-        # dispatch rank and the parse fan-out without a count() job, and
+        # + enqueued), recounted on the write job of every commit that
+        # replaces the frontier (compaction, queue reset, forget). It sizes
+        # the dispatch rank and the parse fan-out without a count() job, and
         # rides in every manifest's meta so a resumed engine starts from it.
-        # Never below the true count. None (a checkpoint written before the
-        # estimate existed) → the multi-task rank until a compaction recounts.
-        self._pending_est: int | None = meta.get(
-            "pending_est", 0 if self.round == 0 else None
-        )
+        # Never below the true count. A checkpoint written before the
+        # estimate existed is counted once, here.
+        est = meta.get("pending_est")
+        if est is None and self.round:
+            est = self.frontier_current().filter(F.col("state") == "pending").count()
+        self._pending_est: int = est or 0
 
     def _parse_width(self) -> int:
         cores = self.spark.sparkContext.defaultParallelism
-        if self._pending_est is None:
-            return cores
         return max(1, min(cores, self._pending_est // PAGES_PER_PARSE_TASK + 1))
 
     def _meta(self, phase: str, **extra) -> dict:
@@ -182,6 +191,28 @@ class CrawlEngine:
             "phase": phase,
             **extra,
         }
+
+    def _commit(
+        self, phase: str, deltas: dict[str, DataFrame], replace=frozenset(), **meta
+    ) -> int:
+        """Stage ``deltas``, then publish them as one snapshot with
+        ``self._meta(phase, **meta)``; tables in ``replace`` start over. A
+        commit that replaces the frontier recounts the pending estimate with
+        an observation on that write job, before the meta is built."""
+        obs = None
+        if "frontier" in replace:
+            obs = Observation()
+            deltas = {
+                **deltas,
+                "frontier": deltas["frontier"].observe(
+                    obs, F.count_if(F.col("state") == "pending").alias("n")
+                ),
+            }
+        sid = self.store.manifest()["snapshot_id"] + 1
+        staged = self.store.stage(sid, deltas)
+        if obs is not None:
+            self._pending_est = int(obs.get["n"] or 0)
+        return self.store.publish(sid, staged, meta=self._meta(phase, **meta), replace=replace)
 
     # ------------------------------------------------------------------ state
     def frontier_current(self) -> DataFrame:
@@ -238,9 +269,8 @@ class CrawlEngine:
         else:
             self.bloom_version = self.bloom.add(seen, self.bloom_version)
         self.round += 1
-        if self._pending_est is not None:
-            self._pending_est += len(rows)
-        sid = self.store.commit({"frontier": seeds, "seen": seen}, meta=self._meta("seed"))
+        self._pending_est += len(rows)
+        sid = self._commit("seed", {"frontier": seeds, "seen": seen})
         seeds.unpersist()
         return sid
 
@@ -380,10 +410,7 @@ class CrawlEngine:
                 F.lit(0).alias("link_idx"),
             )
             cmt0 = posts.filter(F.col("n_comments") > 0).select(
-                F.concat(
-                    F.lit("https://mbasic.facebook.com/groups/"), F.col("group_id"),
-                    F.lit("/posts/"), F.col("post_id"), F.lit("/?p=0"),
-                ).alias("url"),
+                U.comment_url(F.col("group_id"), F.col("post_id"), F.lit(0)).alias("url"),
                 "group_id",
                 "src_rank",
                 F.lit(1).alias("link_idx"),
@@ -580,10 +607,9 @@ class CrawlEngine:
         staged += self.store.stage(sid, {"lineage": lineage})
         # pending loses the fetched and the exhausted rows and gains the
         # enqueued ones; a retried failure stays pending (it is in neither)
-        if self._pending_est is not None:
-            self._pending_est = max(
-                0, self._pending_est - stats.fetched - stats.exhausted + stats.enqueued
-            )
+        self._pending_est = max(
+            0, self._pending_est - stats.fetched - stats.exhausted + stats.enqueued
+        )
         stats.snapshot_id = self.store.publish(
             sid, staged, meta=self._meta("round", stats=stats.__dict__)
         )
@@ -592,12 +618,7 @@ class CrawlEngine:
     def compact_frontier(self) -> None:
         """Rewrite the frontier log as its current view (latest event per URL).
         Bounds the merge-on-read delta chain to ``compact_every`` files."""
-        cur = self.frontier_current().persist()
-        # materialize before the manifest swap (no read-own-write); the
-        # filtered count still builds the whole cache and recounts pending
-        self._pending_est = cur.filter(F.col("state") == "pending").count()
-        self.store.commit({"frontier": cur}, meta=self._meta("compact"), replace={"frontier"})
-        cur.unpersist()
+        self._commit("compact", {"frontier": self.frontier_current()}, replace={"frontier"})
 
     def run(self, max_rounds: int = 1000) -> list[RoundStats]:
         out = []
@@ -624,12 +645,8 @@ class CrawlEngine:
             self.store.read(self.spark, "comments"),
             self.store.read(self.spark, "reactions"),
             comment_pages=self.store.read(self.spark, "comment_pages"),
-        ).persist()
-        enriched.count()  # materialize before the manifest swap
-        self.store.commit(
-            {"posts_enriched": enriched}, meta=self._meta("enrich"), replace={"posts_enriched"}
         )
-        enriched.unpersist()
+        self._commit("enrich", {"posts_enriched": enriched}, replace={"posts_enriched"})
         return self.store.read(self.spark, "posts_enriched")
 
     def repair_empty_text(self) -> int:
@@ -677,11 +694,7 @@ class CrawlEngine:
             targets = targets.filter(~F.col("complete_crawl_comment"))
         offset = F.lit(0) if reset else F.coalesce(F.col("comment_count"), F.lit(0))
         requeue_src = targets.select(
-            F.concat(
-                F.lit("https://mbasic.facebook.com/groups/"), F.col("page_id"),
-                F.lit("/posts/"), F.col("post_id"), F.lit("/?p="),
-                offset.cast("string"),
-            ).alias("url"),
+            U.comment_url(F.col("page_id"), F.col("post_id"), offset).alias("url"),
             F.col("page_id").alias("group_id"),
         ).persist()
         n = requeue_src.count()
@@ -710,11 +723,10 @@ class CrawlEngine:
             depth=self.round,
         )
         self.round += 1
-        if self._pending_est is not None:
-            self._pending_est += n
-        self.store.commit({"frontier": requeue}, meta=self._meta(phase, **meta))
+        self._pending_est += n
+        self._commit(phase, {"frontier": requeue}, **meta)
 
-    def reset_transient_queues(self, kinds: tuple = ("reaction", "comment")) -> int:
+    def reset_transient_queues(self) -> int:
         """U3 queue-reset-on-resume (Facebook_group_reaction.py:91-93): the
         reference's 4-level spider drops its reaction/comment queues at
         restore; the page/post queues survive. Call after constructing an
@@ -722,19 +734,13 @@ class CrawlEngine:
         Dropped URLs stay in the seen set (exactly like the reference, where
         enqueue-time dedup already recorded them), so they are not
         re-enqueued on rediscovery. Returns the number of rows dropped."""
-        cur = self.frontier_current().persist()
-        is_transient = (F.col("state") == "pending") & F.col("kind").isin(*kinds)
+        cur = self.frontier_current()
+        is_transient = (F.col("state") == "pending") & F.col("kind").isin(*TRANSIENT_KINDS)
         n = cur.filter(is_transient).count()
         if n == 0:
-            cur.unpersist()
             return 0
-        kept = cur.filter(~is_transient).persist()
-        # materialize before the manifest swap; recounts pending as it does
-        self._pending_est = kept.filter(F.col("state") == "pending").count()
         self.round += 1
-        self.store.commit({"frontier": kept}, meta=self._meta("queue_reset"), replace={"frontier"})
-        cur.unpersist()
-        kept.unpersist()
+        self._commit("queue_reset", {"frontier": cur.filter(~is_transient)}, replace={"frontier"})
         return n
 
     def forget_urls(self, urls: DataFrame) -> int:
@@ -759,22 +765,21 @@ class CrawlEngine:
         if n == 0:
             targets.unpersist()
             return 0
+        # two readers each: new_seen (the filter rebuild, the seen write) and
+        # targets (new_seen, the frontier write)
         new_seen = self.seen_df().join(targets, "url_canon", "left_anti").persist()
-        new_seen.count()
-        new_frontier = self.frontier_current().join(
-            targets, "url_canon", "left_anti"
-        ).persist()
-        # materialize; recounts pending as it does
-        self._pending_est = new_frontier.filter(F.col("state") == "pending").count()
         self.round += 1
         self.bloom_version += 1
         self.bloom.build(new_seen, version=self.bloom_version)
-        self.store.commit(
-            {"frontier": new_frontier, "seen": new_seen},
-            meta=self._meta("forget"),
+        self._commit(
+            "forget",
+            {
+                "frontier": self.frontier_current().join(targets, "url_canon", "left_anti"),
+                "seen": new_seen,
+            },
             replace={"frontier", "seen"},
         )
-        for df in (targets, new_seen, new_frontier):
+        for df in (targets, new_seen):
             df.unpersist()
         return n
 

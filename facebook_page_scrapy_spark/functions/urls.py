@@ -22,7 +22,7 @@ def host_of(url: Column) -> Column:
     return F.lower(F.parse_url(url, F.lit("HOST")))
 
 
-def canonicalize(url: Column, rewrite_m_to_mbasic: bool = True) -> Column:
+def canonicalize(url: Column) -> Column:
     """Return the canonical form of ``url`` (see module docstring).
 
     Built on Spark's ``parse_url`` (one compiled URI parse per part) instead
@@ -30,14 +30,12 @@ def canonicalize(url: Column, rewrite_m_to_mbasic: bool = True) -> Column:
     smaller, which matters both for Catalyst analysis time (the canonicalizer
     appears in every frontier round) and for codegen size.
 
-    ``rewrite_m_to_mbasic`` applies the ``https://m.`` → ``https://mbasic.``
-    rewrite of debug_empty_text.py:115. Fragments are dropped by ``parse_url``
-    itself; default ports (:80 http, :443 https) are stripped; empty path →
-    '/'; query params are sorted and ``fbclid`` removed.
+    The ``https://m.`` → ``https://mbasic.`` rewrite of debug_empty_text.py:115
+    always applies. Fragments are dropped by ``parse_url`` itself; default
+    ports (:80 http, :443 https) are stripped; empty path → '/'; query params
+    are sorted and ``fbclid`` removed.
     """
-    u = F.trim(url)
-    if rewrite_m_to_mbasic:
-        u = F.regexp_replace(u, r"(?i)^https://m\.", "https://mbasic.")
+    u = F.regexp_replace(F.trim(url), r"(?i)^https://m\.", "https://mbasic.")
 
     part = lambda p: F.parse_url(u, F.lit(p))  # noqa: E731
     scheme = F.lower(part("PROTOCOL"))
@@ -111,6 +109,15 @@ def post_id_of(url_canon: Column) -> Column:
         .when(posts != "", posts)
         .when(rxn != "", rxn)
         .otherwise(F.lit(None).cast("string"))
+    )
+
+
+def comment_url(group_id: Column, post_id: Column, offset: Column) -> Column:
+    """A post's comment-pagination page at ``?p=<offset>``
+    (Facebook_group_cmt.py:130-134)."""
+    return F.concat(
+        F.lit("https://mbasic.facebook.com/groups/"), group_id,
+        F.lit("/posts/"), post_id, F.lit("/?p="), offset.cast("string"),
     )
 
 

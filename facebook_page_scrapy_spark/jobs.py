@@ -77,8 +77,12 @@ def frontier_throughput(
                 .withColumn("priority", U.priority_of(F.col("kind")))
                 .withColumn("enqueued_seq", F.col("id"))
             )
-            fresh = D.dedup_bloom_gated(cand, seen, bloom, version=1)
-            return S.per_host_dispatch(fresh, default_tokens=100).count()
+            probed: list = []
+            fresh = D.dedup_bloom_gated(cand, seen, bloom, 1, cleanup=probed)
+            n = S.per_host_dispatch(fresh, default_tokens=100).count()
+            for df in probed:
+                df.unpersist()
+            return n
 
         # warmup at n/10: compiles every stage (Catalyst analysis + Janino
         # codegen are per-plan constants, cached for the identical timed

@@ -37,6 +37,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# design false-positive rate of every shard
+FPR = 0.01
+
 # Per-python-worker shard cache, keyed bucket -> (path, shard).
 # Versions are monotonic and probes always use the newest committed version,
 # so caching one entry per bucket and evicting the prior version on miss
@@ -101,10 +104,9 @@ class BloomStore:
     path locally). Shards are immutable per version — ``add`` writes v+1.
     """
 
-    def __init__(self, path: str, n_shards: int = 64, fpr: float = 0.01):
+    def __init__(self, path: str, n_shards: int = 64):
         self.path = path
         self.n_shards = n_shards
-        self.fpr = fpr
 
     # -- file helpers --------------------------------------------------------
     def _shard_file(self, version: int, bucket: int) -> str:
@@ -120,7 +122,7 @@ class BloomStore:
     # -- build / add ---------------------------------------------------------
     def build(self, seen: DataFrame, version: int = 1) -> int:
         """Build all shards from the full seen set (url_canon column)."""
-        n_shards, fpr, path = self.n_shards, self.fpr, self.path
+        n_shards = self.n_shards
         shard_file = self._shard_file
         _clear_version(os.path.dirname(shard_file(version, 0)))
 
@@ -132,7 +134,7 @@ class BloomStore:
         def build_shard(pdf: pd.DataFrame) -> pd.DataFrame:
             bucket = int(pdf["bucket"].iloc[0])
             n = max(len(pdf) * 2, 1024)
-            m, k = _bloom_params(n, fpr)
+            m, k = _bloom_params(n, FPR)
             bits = np.zeros(m // 64, dtype=np.uint64)
             h1 = pdf["__h1"].to_numpy(dtype=np.int64)
             h2 = pdf["__h2"].to_numpy(dtype=np.int64)
@@ -153,7 +155,7 @@ class BloomStore:
         built = {r.bucket for r in stats.select("bucket").collect()}
         for b in range(n_shards):
             if b not in built:
-                m, k = _bloom_params(1024, fpr)
+                m, k = _bloom_params(1024, FPR)
                 f = self._shard_file(version, b)
                 os.makedirs(os.path.dirname(f), exist_ok=True)
                 np.savez(f, bits=np.zeros(m // 64, dtype=np.uint64), m=m, k=k, n=0)
@@ -215,11 +217,9 @@ class BloomStore:
     # exchange at all — the candidate rows never shuffle just to be probed.
     MAPSIDE_MAX_BYTES = 256 * 1024 * 1024
 
-    def probe(
-        self, df: DataFrame, version: int, url_col: str = "url_canon",
-        mode: str = "auto",
-    ) -> DataFrame:
-        """Append boolean ``maybe_seen``. False ⇒ definitely new.
+    def probe(self, df: DataFrame, version: int, mode: str = "auto") -> DataFrame:
+        """Append boolean ``maybe_seen`` to ``df`` (keyed by ``url_canon``).
+        False ⇒ definitely new.
 
         ``mode``: ``"auto"`` (default) picks map-side iff the version's
         total shard bytes fit ``MAPSIDE_MAX_BYTES``; ``"mapside"`` /
@@ -247,8 +247,8 @@ class BloomStore:
 
         with_bucket = df.select(
             "*",
-            bucket_of(F.col(url_col), n_shards).alias("__bucket"),
-            *_hash_cols(F.col(url_col)),
+            bucket_of(F.col("url_canon"), n_shards).alias("__bucket"),
+            *_hash_cols(F.col("url_canon")),
         )
 
         if mode == "auto":
@@ -288,9 +288,9 @@ class BloomStore:
         return total
 
 
-def dedup_exact(candidates: DataFrame, seen: DataFrame, key: str = "url_canon") -> DataFrame:
-    """Plain left-anti dedup (J1/J2/J3 semantics)."""
-    return candidates.join(seen.select(key).distinct(), on=key, how="left_anti")
+def dedup_exact(candidates: DataFrame, seen: DataFrame) -> DataFrame:
+    """Plain left-anti dedup on ``url_canon`` (J1/J2/J3 semantics)."""
+    return candidates.join(seen.select("url_canon").distinct(), on="url_canon", how="left_anti")
 
 
 def dedup_bloom_gated(
@@ -298,8 +298,7 @@ def dedup_bloom_gated(
     seen: DataFrame,
     bloom: BloomStore,
     version: int,
-    key: str = "url_canon",
-    cleanup: list | None = None,
+    cleanup: list,
 ) -> DataFrame:
     """Scale path: bloom negatives pass through map-side; only the ~fpr
     positives pay the exact anti-join. Result is exactly the anti-join result
@@ -308,13 +307,12 @@ def dedup_bloom_gated(
     The probe output feeds two branches (fresh ∪ confirmed-suspects); persist
     it so the Arrow probe pass runs once per batch, not once per branch. The
     persisted set is the per-round candidate batch (budget-bounded), never
-    the frontier. The caller owns its lifetime: pass ``cleanup`` (a list) to
-    receive the persisted DataFrame and unpersist it once the result is
-    materialized — otherwise it is leaked into the cache for the session."""
-    flagged = bloom.probe(candidates, version, key).persist()
-    if cleanup is not None:
-        cleanup.append(flagged)
+    the frontier. The caller owns its lifetime: ``cleanup`` (a list)
+    receives the persisted DataFrame, to unpersist once the result is
+    materialized."""
+    flagged = bloom.probe(candidates, version).persist()
+    cleanup.append(flagged)
     fresh = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
     suspects = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-    return fresh.unionByName(dedup_exact(suspects, seen, key))
+    return fresh.unionByName(dedup_exact(suspects, seen))
 

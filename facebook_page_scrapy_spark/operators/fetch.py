@@ -25,12 +25,11 @@ class CorpusFetcher:
     hash(url_canon) and AQE picks the strategy.
     """
 
-    def __init__(self, corpus: DataFrame, fetched_ts: int = 0):
+    def __init__(self, corpus: DataFrame):
         # corpus: doc_id, url, fetched_ts, html (schemas.RAW_PAGES)
         self._corpus = corpus.select(
             F.col("url").alias("__corpus_url"), F.col("doc_id").alias("__doc_id"), "html"
         )
-        self.fetched_ts = fetched_ts
 
     def fetch(self, dispatch: DataFrame) -> DataFrame:
         joined = dispatch.join(
@@ -39,6 +38,6 @@ class CorpusFetcher:
         return (
             joined.withColumn("fetch_ok", F.col("html").isNotNull())
             .withColumn("doc_id", F.coalesce(F.col("__doc_id"), F.col("url_canon")))
-            .withColumn("fetched_ts", F.lit(self.fetched_ts).cast("long"))
+            .withColumn("fetched_ts", F.lit(0).cast("long"))  # closed world: no clock
             .drop("__corpus_url", "__doc_id")
         )

@@ -4,9 +4,10 @@ verified `/opt/spark/jars` has none — SURVEY §4.2.5).
 Mechanics mirror a table format: immutable per-snapshot parquet *delta* dirs,
 a JSON manifest per snapshot listing every delta that composes each table,
 atomic manifest publish (write tmp + rename), monotonically increasing
-snapshot ids, time travel by reading an old manifest, and merge-on-read with
-explicit compaction. Swap-in for real Iceberg is the table-format interface
-(`commit/read/compact/latest`) — the engine never touches files directly.
+snapshot ids, time travel by reading an old manifest, and merge-on-read (a
+commit that ``replace``s a table with its current view is the compaction).
+Swap-in for real Iceberg is the table-format interface
+(`commit/stage/publish/read/latest`) — the engine never touches files directly.
 
 Replaces the reference's checkpointing (full-queue pickle after every fetch,
 ``Facebook_group_post.py:64-74,208``) with per-round atomic snapshots carrying
@@ -133,17 +134,3 @@ class SnapshotStore:
         if not paths:
             return None
         return spark.read.parquet(*[os.path.join(self.path, p) for p in paths])
-
-    def compact(self, spark: SparkSession, table: str, meta: dict | None = None) -> int:
-        """Rewrite a table's delta chain into a single delta (MoR compaction).
-        At 10^10-URL scale this runs every K rounds so the frontier read stays
-        O(1) files per partition instead of O(rounds)."""
-        df = self.read(spark, table)
-        if df is None:
-            return self.latest()
-        # materialize before the manifest swap (read must not see its own write)
-        rows = df.cache()
-        rows.count()
-        sid = self.commit({table: rows}, meta=meta or {"compaction": table}, replace={table})
-        rows.unpersist()
-        return sid

@@ -13,9 +13,6 @@ ingest paths that are genuinely streaming:
   (parquet files appear per round/snapshot) — the engine's own table layout
   doubles as a streaming source, so downstream consumers (dashboards,
   repair jobs) tail the crawl without touching the engine.
-- ``foreach_batch_merge``: the canonical writeStream→foreachBatch pattern for
-  merging discovered URLs into a keyed store; used with availableNow for
-  catch-up runs.
 - ``stateful_host_budget``: the T1 politeness budget as a CUSTOM STATEFUL
   streaming operator (``applyInPandasWithState``): per-host token state
   carried across micro-batches, so a host's budget holds over the whole
@@ -187,21 +184,6 @@ def session_metrics(
     )
 
 
-def foreach_batch_merge(stream: DataFrame, merge_fn, checkpoint_dir: str, available_now: bool = True):
-    """writeStream → foreachBatch(merge_fn(batch_df, batch_id)).
-
-    ``availableNow`` processes everything currently on disk then stops —
-    the catch-up/repair mode (reference T7: debug_empty_text re-crawl)."""
-    writer = (
-        stream.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(merge_fn)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 # --------------------------------------------------------------------------
 # driver-checkable replay harness
 # --------------------------------------------------------------------------
@@ -243,9 +225,8 @@ def run_to_memory(result: DataFrame, name: str) -> DataFrame:
     """Execute a streaming aggregation with ``trigger(availableNow)`` into a
     complete-mode memory sink, wait for it to drain, and return the final
     table — the bounded-stream execution mode that lets a streaming plan
-    answer a batch-shaped oracle query. At 100 TB the sink is foreachBatch
-    MERGE into the store (``foreach_batch_merge``); memory/complete is the
-    harness form for bounded replays only."""
+    answer a batch-shaped oracle query. Memory/complete is the harness form
+    for bounded replays only."""
     q = (
         result.writeStream.outputMode("complete")
         .format("memory")

@@ -6,6 +6,8 @@ reproduce the same order under the same seed list + politeness budget."""
 
 from __future__ import annotations
 
+import json
+
 import pytest
 
 from facebook_page_scrapy_spark import datagen
@@ -91,6 +93,11 @@ def test_resume_mid_crawl(spark, tmp_path):
         eng1.run_round()
     # failure-free rounds keep the pending estimate exact
     assert eng1._pending_est == pending_count(eng1)
+    # compaction recounts on its frontier write and caches nothing
+    cached = cached_dataframes(spark)
+    eng1.compact_frontier()
+    assert eng1._pending_est == pending_count(eng1)
+    assert cached_dataframes(spark) == cached
 
     # new engine object on the same checkpoint dir = process restart
     eng2 = build_engine(spark, site, tmp_path, default_tokens=1)
@@ -100,6 +107,25 @@ def test_resume_mid_crawl(spark, tmp_path):
 
     assert eng2.fetch_order() == sim.fetch_order
     assert eng2.seen_set() == sim.seen
+
+
+def test_resume_without_estimate_counts_pending(spark, tmp_path):
+    """A checkpoint whose manifest carries no pending estimate (written
+    before the estimate existed) is counted once when an engine opens it."""
+    site = datagen.make_site(n_groups=2, pages_per_group=2, posts_per_page=1, seed=23)
+    eng1 = build_engine(spark, site, tmp_path, default_tokens=1)
+    eng1.seed(site.seeds)
+    for _ in range(2):
+        eng1.run_round()
+    path = eng1.store._manifest_file(eng1.store.latest())
+    with open(path) as f:
+        man = json.load(f)
+    del man["meta"]["pending_est"]
+    with open(path, "w") as f:
+        json.dump(man, f)
+
+    eng2 = build_engine(spark, site, tmp_path, default_tokens=1)
+    assert eng2._pending_est == pending_count(eng2) > 0
 
 
 def test_failed_stage_rolls_back_and_retries(spark, tmp_path, monkeypatch):
@@ -171,8 +197,11 @@ def test_queue_reset_on_resume_parity(spark, tmp_path):
         spark, site, tmp_path, default_tokens=1, global_budget=1,
         four_level=True, n_bloom_shards=4,
     )
+    cached = cached_dataframes(spark)
     dropped = eng2.reset_transient_queues()
     assert dropped > 0
+    assert eng2._pending_est == pending_count(eng2)
+    assert cached_dataframes(spark) == cached
     eng2.run(max_rounds=80)
 
     assert eng2.fetch_order() == sim.fetch_order

@@ -15,7 +15,7 @@ def _urls(spark, names):
 
 def test_bloom_no_false_negatives_and_bounded_fpr(spark, tmp_path):
     seen = [f"https://h{i % 7}.example/p/{i}" for i in range(2000)]
-    store = BloomStore(str(tmp_path / "f"), n_shards=8, fpr=0.01)
+    store = BloomStore(str(tmp_path / "f"), n_shards=8)
     store.build(_urls(spark, seen), version=1)
 
     flagged = store.probe(_urls(spark, seen), version=1)
@@ -48,8 +48,11 @@ def test_bloom_gated_equals_exact(spark, tmp_path):
     store.build(seen, version=1)
 
     exact = {r.url_canon for r in dedup_exact(cand, seen).collect()}
-    gated = {r.url_canon for r in dedup_bloom_gated(cand, seen, store, 1).collect()}
+    probed: list = []
+    gated = {r.url_canon for r in dedup_bloom_gated(cand, seen, store, 1, probed).collect()}
     assert gated == exact == {f"s://new/{i}" for i in range(300)}
+    for df in probed:
+        df.unpersist()
 
 
 def test_worker_cache_evicts_old_versions(tmp_path):

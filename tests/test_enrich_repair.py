@@ -13,6 +13,7 @@ from facebook_page_scrapy_spark import datagen
 from facebook_page_scrapy_spark.crawl import CrawlEngine
 from facebook_page_scrapy_spark.operators import enrich as E
 from facebook_page_scrapy_spark.operators.fetch import CorpusFetcher
+from test_crawl_parity import cached_dataframes, pending_count
 
 
 def crawl_site(spark, site, tmp, **kw):
@@ -30,8 +31,11 @@ def test_enrich_counts_and_translated_reactions(spark, tmp_path):
         comments_per_post=15, comment_page_size=10, four_level=True, seed=51,
     )
     eng = crawl_site(spark, site, tmp_path / "c", four_level=True)
+    cached = cached_dataframes(spark)
     enriched = eng.enrich_posts()
     assert enriched is not None
+    assert eng._pending_est == pending_count(eng)
+    assert cached_dataframes(spark) == cached
     got = {r.post_id: r for r in enriched.collect()}
 
     # ground truth from the generator's site graph
@@ -120,8 +124,11 @@ def test_forget_urls_allows_rediscovery(spark, tmp_path):
     target = next(u for u, n in site.nodes.items() if n.kind == "post")
     target_df = spark.createDataFrame([(target,)], "url_canon string")
     v_before = eng.bloom_version
+    cached = cached_dataframes(spark)
     forgotten = eng.forget_urls(target_df)
     assert forgotten == 1
+    assert eng._pending_est == pending_count(eng)
+    assert cached_dataframes(spark) == cached
     assert target not in eng.seen_set()
     # one rebuild at the next filter version, and a probe there reports the
     # retracted url as unseen

@@ -11,7 +11,11 @@ from facebook_page_scrapy_spark.jobs import frontier_throughput
 
 
 def test_frontier_throughput_smoke(spark, tmp_path):
+    before = set(spark.sparkContext._jsc.getPersistentRDDs())
     r = frontier_throughput(spark, n_urls=20_000, n_hosts=50, work_dir=str(tmp_path))
+    # the gate's persisted probe output is released after each pass (the
+    # context cleaner may drop older RDDs meanwhile, so compare as sets)
+    assert set(spark.sparkContext._jsc.getPersistentRDDs()) <= before
     assert r["urls"] == 20_000 and r["hosts"] == 50
     # the second half of the id space (10k urls over 50 hosts = 200/host) is
     # fresh; the politeness window caps dispatch at 100 tokens/host

@@ -382,14 +382,14 @@ def test_seed_and_requeue_deltas_have_no_partitionless_window(spark, tmp_path, m
     eng = CrawlEngine(spark, str(tmp_path / "c"), CorpusFetcher(corpus),
                       default_tokens=500, n_bloom_shards=4, four_level=True)
     windows = {}
-    commit = eng.store.commit
+    commit = eng._commit
 
-    def spy(deltas, meta=None, replace=None):
-        if meta["phase"] in ("seed", "repair", "recrawl_comments"):
-            windows[meta["phase"]] = _partitionless_windows(deltas["frontier"])
-        return commit(deltas, meta=meta, replace=replace)
+    def spy(phase, deltas, replace=frozenset(), **meta):
+        if phase in ("seed", "repair", "recrawl_comments"):
+            windows[phase] = _partitionless_windows(deltas["frontier"])
+        return commit(phase, deltas, replace=replace, **meta)
 
-    monkeypatch.setattr(eng.store, "commit", spy)
+    monkeypatch.setattr(eng, "_commit", spy)
     eng.seed(site.seeds)
     eng.run(max_rounds=10)
     assert eng.repair_empty_text() == 1
